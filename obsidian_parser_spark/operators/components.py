@@ -15,12 +15,12 @@ every step a pure (groupBy + broadcast-free join) DataFrame plan:
 Hub skew: both steps are ``groupBy(u).agg(min(v))`` + a re-join of the
 grouped min onto the symmetric edge list.  The aggregation is partial
 (map-side combined), so a 10^7-degree hub never concentrates on one reducer;
-the re-join is skew-split by AQE (spark.sql.adaptive.skewJoin).  Each round
-is checkpointed via ``checkpointing.cut_lineage`` — reliable
-``df.checkpoint()`` when the session has ``setCheckpointDir`` configured
-(the cluster mode: the fixpoint survives executor loss), else
-``localCheckpoint`` (local mode) — this is also the resume point for the
-north_rule's checkpointed-lineage requirement.
+the re-join is skew-split by AQE (spark.sql.adaptive.skewJoin).  The rounds
+run on ``checkpointing.fixpoint``: each round is checkpointed via
+``cut_lineage`` — reliable ``df.checkpoint()`` when the session has
+``setCheckpointDir`` configured (the cluster mode: the fixpoint survives
+executor loss), else ``localCheckpoint`` (local mode) — and the
+convergence checksum rides that checkpoint action.
 
 Node ids are strings; ordering is lexicographic (any total order works).
 """
@@ -30,7 +30,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..checkpointing import cut_lineage
+from ..checkpointing import cut_lineage, fixpoint
 
 
 def _dedup(e: DataFrame) -> DataFrame:
@@ -68,29 +68,6 @@ def _small_star(e: DataFrame) -> DataFrame:
     return pairs.unionAll(self_pairs)
 
 
-def _cut_with_checksum(e: DataFrame) -> tuple[DataFrame, tuple[int, int]]:
-    """Checkpoint ``e`` and return (materialized frame, (count, hash-sum))
-    with the checksum collected DURING the checkpoint action via the
-    Observation API — the convergence probe rides the materialization pass
-    instead of running a separate aggregation job over the checkpointed
-    frame each round (measured in-process at sf0.1: one fewer job/round,
-    ~5% steady-state and ~35% cold-JIT round-loop win, identical rounds)."""
-    from pyspark.sql import Observation
-
-    obs = Observation()
-    cut = cut_lineage(
-        e.observe(
-            obs,
-            F.count(F.lit(1)).alias("n"),
-            F.coalesce(
-                F.sum(F.xxhash64("u", "v").cast("decimal(38,0)")), F.lit(0)
-            ).alias("h"),
-        )
-    )
-    m = obs.get
-    return cut, (int(m["n"]), int(m["h"]))
-
-
 def connected_components(
     nodes: DataFrame,
     edges: DataFrame,
@@ -125,8 +102,10 @@ def connected_components(
     ``localCheckpoint`` stays load-bearing: each star step references its
     input twice (groupBy side + join side), so an unmaterialized input
     recomputes its subplan per reference (measured 2-4× slower).  The
-    initial checksum job is skipped (sentinel prev) — convergence needs
-    only round-to-round equality.
+    initial checksum job is skipped — convergence needs only round-to-
+    round equality.  Raises ``FixpointNotConverged`` (a RuntimeError) when
+    ``max_iter`` rounds do not reach the star forest: a truncated
+    contraction would silently split components.
     """
     # Dedup the (string) edge multiset FIRST: the link multigraph carries
     # ~10× duplicate pairs, so deduping before the surrogate relabel
@@ -158,13 +137,12 @@ def connected_components(
         .join(mv, "_sv")
         .select(F.least("u", "v").alias("u"), F.greatest("u", "v").alias("v"))
     )
-    e = cut_lineage(e)
-    prev = (-1, -1)
-    for _ in range(max_iter):
-        e, cur = _cut_with_checksum(_dedup(_small_star(_large_star(e))))
-        if cur == prev:
-            break
-        prev = cur
+    e = fixpoint(
+        cut_lineage(e),
+        lambda e, _rnd: _dedup(_small_star(_large_star(e))),
+        max_iter,
+        "connected_components",
+    )
     # fixpoint: e is a star forest. _dedup keeps (least, greatest) = (root,
     # child) orientation, since star roots are component minima (in nid
     # order — an arbitrary but consistent total order).
@@ -202,43 +180,10 @@ def bfs_distances(
     reachable in ≤ ``max_depth`` hops (dist 0 = the root itself);
     unreachable nodes are absent.  The standard KG reachability/
     neighborhood query (``edges`` needs (subj, obj); pass
-    ``analytics.link_edges(...)`` for the link graph).
-
-    Scale shape: classic frontier expansion — per round ONE equi-join of
-    the (small) frontier onto the edge list plus an anti-join against the
-    visited set, both key-partitioned; the visited set is re-checkpointed
-    per round (``cut_lineage`` — reliable store when configured) exactly
-    like the CC/PageRank fixpoints, so round N's plan never contains
-    rounds 0..N-1.  Rounds stop early on an empty frontier (one cheap
-    count on a frame already materialized by the checkpoint); results are
-    independent of the stop rule — later rounds of an empty frontier are
-    empty.  A 10^7-degree hub lands in the frontier once and fans out via
-    the partial-agg distinct, never through a single reducer."""
-    spark = edges.sparkSession
-    # materialize the distinct edge list ONCE — it is re-joined every round
-    e = cut_lineage(
-        edges.select(F.col("subj").alias("src"), F.col("obj").alias("dst")).distinct()
-    )
-    visited = cut_lineage(
-        spark.createDataFrame([(root, 0)], "id string, dist int")
-    )
-    frontier = visited
-    for d in range(1, max_depth + 1):
-        # the frontier is checkpointed BEFORE the union/count, so the
-        # empty-frontier probe and next round read a materialized frame
-        # instead of re-deriving the whole round chain (lineage cut)
-        nxt = cut_lineage(
-            e.join(frontier.select(F.col("id").alias("src")), "src")
-            .select(F.col("dst").alias("id"))
-            .distinct()
-            .join(visited.select("id"), "id", "left_anti")
-            .withColumn("dist", F.lit(d).cast("int"))
-        )
-        visited = cut_lineage(visited.unionByName(nxt))
-        frontier = nxt
-        if frontier.limit(1).count() == 0:
-            break
-    return visited
+    ``analytics.link_edges(...)`` for the link graph).  It is
+    ``multi_source_bfs`` from a one-row seed frame."""
+    seeds = edges.sparkSession.createDataFrame([(root,)], "seed string")
+    return multi_source_bfs(edges, seeds, max_depth).select("id", "dist")
 
 
 def multi_source_bfs(
@@ -250,13 +195,20 @@ def multi_source_bfs(
     for each (node, seed) pair with the node reachable from that seed in
     ≤ ``max_depth`` hops.  ``seeds`` is a one-column ('seed') frame.
 
-    Scale shape: identical frontier-expansion fixpoint to
-    ``bfs_distances`` but keyed on the (id, seed) PAIR — s seeds cost one
-    BFS whose state is at most s× larger, not s sequential jobs (the
-    per-round edge join and anti-join stay key-partitioned; the frontier
-    distinct is map-side combined).  Per-round lineage cut + early empty-
-    frontier exit as in the single-source version; results are
-    independent of the stop rule."""
+    Scale shape: frontier expansion keyed on the (id, seed) PAIR — s
+    seeds cost one BFS whose state is at most s× larger, not s
+    sequential jobs.  The only state is the ``visited`` frame; round d's
+    frontier is its ``dist == d-1`` slice.  Per round ONE equi-join of the
+    frontier onto the edge list plus an anti-join against ``visited``,
+    both key-partitioned; a 10^7-degree hub lands in the frontier once
+    and fans out via the map-side-combined distinct, never through a
+    single reducer.  The rounds run on ``checkpointing.fixpoint``: one
+    lineage cut of ``visited`` per round, whose (rows, checksum) probe
+    stops the loop at the first round that adds nothing (``visited`` only
+    grows, so an equal row count means an empty frontier).  ``max_depth``
+    is the operator's contract, not a failure, so hitting it returns.
+    Results are independent of the stop rule — later rounds of an empty
+    frontier are empty."""
     e = cut_lineage(
         edges.select(F.col("subj").alias("src"), F.col("obj").alias("dst")).distinct()
     )
@@ -265,20 +217,21 @@ def multi_source_bfs(
             F.col("seed").alias("id"), "seed", F.lit(0).cast("int").alias("dist")
         )
     )
-    frontier = visited
-    for d in range(1, max_depth + 1):
-        nxt = cut_lineage(
+
+    def expand(visited: DataFrame, d: int) -> DataFrame:
+        frontier = visited.filter(F.col("dist") == d - 1)
+        nxt = (
             e.join(frontier.select(F.col("id").alias("src"), "seed"), "src")
             .select(F.col("dst").alias("id"), "seed")
             .distinct()
             .join(visited.select("id", "seed"), ["id", "seed"], "left_anti")
             .withColumn("dist", F.lit(d).cast("int"))
         )
-        visited = cut_lineage(visited.unionByName(nxt))
-        frontier = nxt
-        if frontier.limit(1).count() == 0:
-            break
-    return visited
+        return visited.unionByName(nxt)
+
+    return fixpoint(
+        visited, expand, max_depth, "multi_source_bfs", raise_at_cap=False
+    )
 
 
 def closeness_stats(

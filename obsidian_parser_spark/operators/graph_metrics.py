@@ -15,8 +15,8 @@ built so every step is a key-partitioned DataFrame plan that survives a
   neighbors.
 * ``k_core`` — iterative peel: drop nodes with undirected degree < k,
   re-derive degrees, repeat to fixpoint.  Each round is one map-side-
-  combined groupBy + two semi-joins, checkpointed like the CC fixpoint
-  (``checkpointing.cut_lineage`` — durable on a cluster).
+  combined groupBy + two semi-joins, run on ``checkpointing.fixpoint``
+  like CC (one lineage cut per round — durable on a cluster).
 * ``label_propagation`` — synchronous LPA over a FIXED round count with a
   fully deterministic update (most-frequent neighbor label, ties to the
   smallest label), so two engines (and two cluster sizes) produce
@@ -34,7 +34,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..checkpointing import cut_lineage
+from ..checkpointing import cut_lineage, fixpoint
 
 
 def _undirected(edges: DataFrame) -> DataFrame:
@@ -175,18 +175,19 @@ def k_core(edges: DataFrame, k: int = 3, max_iter: int = 50) -> DataFrame:
     Peeling fixpoint: each round computes undirected degrees (one
     map-side-combined groupBy), keeps nodes with degree ≥ k, and restricts
     the edge set to kept×kept via two semi-joins.  The fixpoint is unique
-    (independent of peel order), so early exit on a stable edge count is
-    safe.  Each round's edge frame is checkpointed (durable on a cluster);
+    (independent of peel order), and the edge set only shrinks, so the
+    early exit of ``checkpointing.fixpoint`` on an unchanged (rows,
+    checksum) is exact.  Each round's edge frame is checkpointed (durable
+    on a cluster) and the probe rides that checkpoint — no count job;
     round N's plan never contains rounds 0..N-1.
 
-    Raises RuntimeError when ``max_iter`` rounds don't reach the fixpoint
-    (a long induced path peels one layer per round from its ends) — a
-    truncated peel is never silently returned as the core, since it could
-    contain nodes below the documented degree-≥-k invariant."""
-    e = cut_lineage(_undirected(edges))
-    prev = -1
-    converged = False
-    for _ in range(max_iter):
+    Raises ``FixpointNotConverged`` (a RuntimeError) when ``max_iter``
+    rounds don't reach the fixpoint (a long induced path peels one layer
+    per round from its ends) — a truncated peel is never silently
+    returned as the core, since it could contain nodes below the
+    documented degree-≥-k invariant."""
+
+    def peel(e: DataFrame, _rnd: int) -> DataFrame:
         keep = (
             _symmetric(e)
             .groupBy("u")
@@ -194,21 +195,13 @@ def k_core(edges: DataFrame, k: int = 3, max_iter: int = 50) -> DataFrame:
             .filter(F.col("d") >= k)
             .select(F.col("u").alias("id"))
         )
-        e = cut_lineage(
+        return (
             e.join(keep.select(F.col("id").alias("u")), "u", "left_semi")
             .join(keep.select(F.col("id").alias("v")), "v", "left_semi")
             .select("u", "v")  # USING-joins reorder columns; re-pin (u, v)
         )
-        cur = e.count()
-        if cur == prev:
-            converged = True
-            break
-        prev = cur
-    if not converged:
-        raise RuntimeError(
-            f"k_core did not converge within max_iter={max_iter} rounds "
-            f"(edge count still changing: {prev} -> {cur}); raise max_iter"
-        )
+
+    e = fixpoint(cut_lineage(_undirected(edges)), peel, max_iter, "k_core")
     return (
         _symmetric(e)
         .groupBy("u")

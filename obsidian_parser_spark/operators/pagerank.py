@@ -35,7 +35,7 @@ long accumulator holds to ~10^12 nodes — past that, lower SCALE.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..checkpointing import cut_lineage
@@ -73,39 +73,11 @@ def pagerank(
     weight_col: str | None = None,
 ) -> DataFrame:
     """→ (id, pr) for every node; ``edges`` needs (subj, obj), direction
-    respected, parallel edges weighted (or pre-weighted via ``weight_col``)."""
-    base = (100 - damping_pct) * SCALE // 100
-
-    w = _edge_weights(edges, weight_col=weight_col)
-    out = w.groupBy("u").agg(F.sum("w").alias("od"))
-    wj = cut_lineage(w.join(out, "u"))
-
-    all_nodes = _node_ids(nodes, id_col)
-    pr = all_nodes.select("id", F.lit(SCALE).cast("long").alias("pr"))
-
-    for _ in range(n_iter):
-        pr = cut_lineage(_step(wj, all_nodes, pr, base, damping_pct))
-    return pr
-
-
-def _step(
-    wj: DataFrame, all_nodes: DataFrame, pr: DataFrame, base: int, damping_pct: int
-) -> DataFrame:
-    """One un-checkpointed iteration (factored out so the plan-shape gates
-    can assert its aggregation is map-side partial — the returned frame of
-    ``pagerank`` itself is checkpointed and shows only an RDD scan)."""
-    contribs = (
-        wj.join(pr.select(F.col("id").alias("u"), "pr"), "u")
-        .select("v", F.expr("pr * w DIV od").alias("c"))
-        .groupBy("v")
-        .agg(F.sum("c").alias("m"))
-    )
-    return all_nodes.join(contribs.withColumnRenamed("v", "id"), "id", "left").select(
-        "id",
-        (F.lit(base) + F.expr(f"{damping_pct} * coalesce(m, 0L) DIV 100"))
-        .cast("long")
-        .alias("pr"),
-    )
+    respected, parallel edges weighted (or pre-weighted via ``weight_col``).
+    It is the personalized loop below with EVERY node a seed: SCALE·1 and
+    base·1 are the same integers, so the output is bit-identical to a
+    uniform-teleport loop."""
+    return _ranks(nodes, edges, F.lit(1), n_iter, damping_pct, id_col, weight_col)
 
 
 def personalized_pagerank(
@@ -128,40 +100,60 @@ def personalized_pagerank(
     + one map-side-combined sum, per-round checkpointed; the seed
     membership is a literal predicate (no extra join) since seed sets are
     small by definition."""
+    is_seed = F.col("id").isin(list(seeds))
+    return _ranks(nodes, edges, is_seed, n_iter, damping_pct, id_col)
+
+
+def _ranks(
+    nodes: DataFrame,
+    edges: DataFrame,
+    is_seed: Column,
+    n_iter: int,
+    damping_pct: int,
+    id_col: str,
+    weight_col: str | None = None,
+) -> DataFrame:
+    """The shared fixed-round loop: ``n_iter`` checkpointed ``_step``s
+    from pr_0 = SCALE·is_seed."""
     base = (100 - damping_pct) * SCALE // 100
 
-    w = _edge_weights(edges)
+    w = _edge_weights(edges, weight_col=weight_col)
     out = w.groupBy("u").agg(F.sum("w").alias("od"))
     wj = cut_lineage(w.join(out, "u"))
 
-    is_seed = F.col("id").isin(list(seeds)).cast("long")
-    flagged = cut_lineage(
-        _node_ids(nodes, id_col).select("id", is_seed.alias("is_seed"))
+    flagged = _node_ids(nodes, id_col).select(
+        "id", is_seed.cast("long").alias("is_seed")
     )
     pr = flagged.select(
         "id", (F.lit(SCALE) * F.col("is_seed")).cast("long").alias("pr")
     )
     for _ in range(n_iter):
-        contribs = (
-            wj.join(pr.select(F.col("id").alias("u"), "pr"), "u")
-            .select("v", F.expr("pr * w DIV od").alias("c"))
-            .groupBy("v")
-            .agg(F.sum("c").alias("m"))
-        )
-        pr = cut_lineage(
-            flagged.join(
-                contribs.withColumnRenamed("v", "id"), "id", "left"
-            ).select(
-                "id",
-                (
-                    F.col("is_seed") * base
-                    + F.expr(f"{damping_pct} * coalesce(m, 0L) DIV 100")
-                )
-                .cast("long")
-                .alias("pr"),
-            )
-        )
+        pr = cut_lineage(_step(wj, flagged, pr, base, damping_pct))
     return pr
+
+
+def _step(
+    wj: DataFrame, flagged: DataFrame, pr: DataFrame, base: int, damping_pct: int
+) -> DataFrame:
+    """One un-checkpointed iteration over the (id, is_seed) node frame
+    (factored out so the plan-shape gates can assert its aggregation is
+    map-side partial — the returned frame of ``pagerank`` itself is
+    checkpointed and shows only an RDD scan)."""
+    contribs = (
+        wj.join(pr.select(F.col("id").alias("u"), "pr"), "u")
+        .select("v", F.expr("pr * w DIV od").alias("c"))
+        .groupBy("v")
+        .agg(F.sum("c").alias("m"))
+    )
+    return flagged.join(contribs.withColumnRenamed("v", "id"), "id", "left").select(
+        "id",
+        (
+            F.col("is_seed") * base
+            + F.expr(f"{damping_pct} * coalesce(m, 0L) DIV 100")
+        )
+        .cast("long")
+        .alias("pr"),
+    )
 
 
 def hits(

@@ -189,3 +189,55 @@ def test_multi_source_bfs_and_closeness(spark):
     # d is reached from a(3), b(2), c(1), x(2), d(0) -> 5 seeds, sum 8
     assert stats["d"] == (5, 8, 0)
     assert stats["a"] == (1, 0, 0)  # only from itself
+
+
+# --- round caps and the shared fixpoint driver ----------------------------
+
+
+@pytest.mark.parametrize("max_iter", [1, 0])
+def test_cc_raises_at_round_cap(spark, max_iter):
+    # a 17-node path needs several star rounds; a truncated contraction
+    # would split it into several components, so the cap must raise
+    ids = [f"p{i:02d}" for i in range(17)]
+    nodes = spark.createDataFrame([(n,) for n in ids], "doc_id string")
+    edges = spark.createDataFrame(list(zip(ids, ids[1:])), "subj string, obj string")
+    with pytest.raises(RuntimeError, match="did not converge"):
+        connected_components(nodes, edges, max_iter=max_iter)
+
+
+def test_fixpoint_logs_each_round_and_honors_cap(spark, caplog):
+    import logging
+
+    from pyspark.sql import functions as F
+
+    from obsidian_parser_spark.checkpointing import FixpointNotConverged, fixpoint
+
+    df = spark.range(6).toDF("x")
+
+    def step(d, rnd):
+        return d.filter(F.col("x") >= min(rnd, 3))
+
+    logger = "obsidian_parser_spark.checkpointing"
+    with caplog.at_level(logging.INFO, logger=logger):
+        out = fixpoint(df, step, 10, "shrink")
+    recs = [r for r in caplog.records if r.name == logger]
+    # rows 5, 4, 3, 3: round 4 repeats round 3 and stops the loop
+    assert [r.levelno for r in recs] == [logging.INFO] * 4
+    assert [r.args[:3] for r in recs] == [
+        ("shrink", 1, 5), ("shrink", 2, 4), ("shrink", 3, 3), ("shrink", 4, 3)
+    ]
+    for r in recs:
+        msg = r.getMessage()
+        for key in ("shrink", "round=", "rows=", "checksum=", "seconds="):
+            assert key in msg
+    assert recs[2].args[3] == recs[3].args[3]
+    assert sorted(r.x for r in out.collect()) == [3, 4, 5]
+
+    # a cap that is the caller's contract returns the last round's frame
+    caplog.clear()
+    with caplog.at_level(logging.INFO, logger=logger):
+        capped = fixpoint(df, step, 2, "shrink", raise_at_cap=False)
+    assert len([r for r in caplog.records if r.name == logger]) == 2
+    assert capped.count() == 4
+    with pytest.raises(FixpointNotConverged, match="did not converge"):
+        fixpoint(df, step, 2, "shrink")

@@ -112,6 +112,14 @@ def test_k_core_raises_instead_of_returning_truncated_peel(spark):
         k_core(_edges(spark, path), k=2, max_iter=1)
 
 
+def test_k_core_zero_rounds_raises_runtime_error(spark):
+    from obsidian_parser_spark.operators.graph_metrics import k_core
+
+    # zero rounds is a cap like any other: nothing converged
+    with pytest.raises(RuntimeError, match="did not converge"):
+        k_core(_edges(spark, [("a", "b"), ("b", "c")]), k=2, max_iter=0)
+
+
 def test_label_propagation_two_cliques(spark):
     from obsidian_parser_spark.operators.graph_metrics import label_propagation
 

@@ -151,7 +151,7 @@ def test_pagerank_contribution_sum_is_partial(spark):
 
     nodes = spark.createDataFrame(
         [(f"n{i}",) for i in range(6)], "doc_id string"
-    ).selectExpr("doc_id AS id")
+    ).selectExpr("doc_id AS id", "CAST(1 AS BIGINT) AS is_seed")
     wj = spark.createDataFrame(
         [(f"n{i}", f"n{(i + 1) % 6}", 1, 1) for i in range(6)],
         "u string, v string, w long, od long",
