@@ -19,6 +19,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from .overlap import capped_overlap
+
 LINK_PREDS = ("links_to", "embeds")
 
 
@@ -157,19 +159,9 @@ def related_notes(
     identical reasoning to the stop-shingle cap in dedup.ngram_jaccard).
     Map-side partial aggs throughout; no driver-side state."""
     le = link_edges(edges).select("subj", "obj").distinct()
-    keep = le.groupBy("obj").agg(F.count("*").alias("_df")).filter(
-        F.col("_df") <= max_target_df
-    )
-    le = le.join(keep.select("obj"), "obj")
-    a = le.select(F.col("subj").alias("a"), "obj")
-    b = le.select(F.col("subj").alias("b"), "obj")
-    return (
-        a.join(b, "obj")
-        .filter(F.col("a") < F.col("b"))
-        .groupBy("a", "b")
-        .agg(F.count("*").alias("shared"))
-        .filter(F.col("shared") >= min_shared)
-    )
+    return capped_overlap(
+        le, le, max_target_df, pred="<", min_count=min_shared
+    ).toDF("a", "b", "shared")
 
 
 def cocitation_pairs(
@@ -186,20 +178,10 @@ def cocitation_pairs(
     out-link count exceeds ``max_source_df`` dropped first (a note that
     links to everything vouches for nothing, and would make the
     self-join quadratic).  Map-side partial aggs; no driver state."""
-    le = link_edges(edges).select("subj", "obj").distinct()
-    keep = le.groupBy("subj").agg(F.count("*").alias("_df")).filter(
-        F.col("_df") <= max_source_df
-    )
-    le = le.join(keep.select("subj"), "subj")
-    a = le.select(F.col("obj").alias("a"), "subj")
-    b = le.select(F.col("obj").alias("b"), "subj")
-    return (
-        a.join(b, "subj")
-        .filter(F.col("a") < F.col("b"))
-        .groupBy("a", "b")
-        .agg(F.count("*").alias("shared"))
-        .filter(F.col("shared") >= min_shared)
-    )
+    le = link_edges(edges).select("obj", "subj").distinct()
+    return capped_overlap(
+        le, le, max_source_df, pred="<", min_count=min_shared
+    ).toDF("a", "b", "shared")
 
 
 def bucket_edge_cut(

@@ -1,29 +1,29 @@
-"""Document deduplication for training-data pipelines.
+"""Document deduplication for training-data pipelines, over a
+``documents(doc_id, text)`` table (media and embedding variants take the
+hash or vector tables instead).  Operators, grouped by how candidate
+pairs are found:
 
-Four detectors over a ``documents(doc_id, text)`` table, scale-shaped:
+* exact hashing   — ``exact_duplicates`` (md5 window), ``phash_exact_clusters``
+                    (equal perceptual hash), ``bloom_membership`` (Bloom
+                    pre-screen of a batch against a base corpus).
+* shared keys     — ``ngram_jaccard_pairs``, ``containment_pairs``,
+                    ``winnow_pairs``, ``contamination_pairs`` and
+                    ``incremental_jaccard_pairs`` pair documents through a
+                    df-capped inverted index on their distinct shingles or
+                    fingerprints; the index join and pair count are
+                    ``overlap.capped_overlap``, whose docstring argues why
+                    capping one join side is exact.  ``duplicated_spans``
+                    reports the shared shingles themselves.
+* banded sketches — ``minhash_lsh_pairs`` (MinHash bands; candidates are
+                    verified by ``lsh_verified_pairs``), ``simhash_near_dups``
+                    and ``phash_near_pairs`` (16-bit bands, pigeonhole),
+                    ``embedding_cosine_pairs`` (sign-LSH tables).
+* clustering      — ``semdedup_prune`` (within-centroid cosine) and
+                    ``dedup_clusters`` (pairs → clusters with a keeper).
 
-* exact          — hash-groupBy on the full text; one shuffle, map-side
-                   partial agg, no UDF.
-* ngram_jaccard  — shingle explode → self-join on shingle → pairwise
-                   Jaccard ≥ τ.  The shingle join is the classic inverted-
-                   index candidate generator; frequent-shingle skew is
-                   handled by dropping shingles above a document-frequency
-                   cap (stop-shingles carry no discriminative signal) —
-                   without the cap one hot shingle produces a quadratic
-                   join blowup at 100 TB.
-* minhash_lsh    — k MinHash signatures banded into b buckets; candidate
-                   pairs = same (band, key).  Hashes are md5-based and
-                   lexicographic-min over hex strings, so an independent
-                   engine (the DuckDB oracle) reproduces them bit-for-bit;
-                   no RNG, no engine-specific hash.
-* simhash        — 64-bit SimHash over md5 (or xxhash64) token bits,
-                   fully JVM-side: explode → per-token bit contributions →
-                   64 map-side-combined sums per doc; near-dups = hamming
-                   distance ≤ r via 4-band blocking (pigeonhole: r ≤ 3 ⇒
-                   one identical 16-bit band).  The md5 family is
-                   reproduced bit-for-bit by the DuckDB oracle.
-
-All detectors emit deterministic, order-insensitive pair/group frames.
+Hashes are md5-based wherever a DuckDB oracle must reproduce them
+bit-for-bit; ``hash_fn='xxh'`` selects the engine-local scale variant.
+All operators emit deterministic, order-insensitive pair/group frames.
 """
 
 from __future__ import annotations
@@ -32,6 +32,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..checkpointing import cut_lineage
+from .overlap import attach_sizes, capped_overlap, jaccard_at_least
 
 # ---------------------------------------------------------------- exact
 
@@ -130,38 +131,8 @@ def ngram_jaccard_pairs(
     sh = cut_lineage(
         distinct_shingles(documents, n=n, id_col=id_col, text_col=text_col)
     )
-    sizes = sh.groupBy("doc_id").agg(F.count("*").alias("sz"))
-    # stop-shingle cap: bound the per-shingle fanout (skew guard)
-    df_cap = sh.groupBy("shingle").agg(F.count("*").alias("df")).filter(
-        F.col("df") <= max_shingle_df
-    )
-    # cap ONE side only: the inner self-join on shingle already restricts
-    # pairs to shingles that survive on the capped side, so capping both
-    # sides computed the identical pair set for an extra full exchange +
-    # semi-join of the shingle stream (an uncapped b-side row for a
-    # dropped mega-shingle matches nothing)
-    a = sh.join(df_cap.select("shingle"), "shingle").select(
-        F.col("doc_id").alias("a"), "shingle"
-    )
-    b = sh.select(F.col("doc_id").alias("b"), "shingle")
-    inter = (
-        a.join(b, "shingle")
-        .filter(F.col("a") < F.col("b"))
-        .groupBy("a", "b")
-        .agg(F.count("*").alias("inter"))
-    )
-    sa = sizes.select(F.col("doc_id").alias("a"), F.col("sz").alias("sza"))
-    sb = sizes.select(F.col("doc_id").alias("b"), F.col("sz").alias("szb"))
-    return (
-        inter.join(sa, "a")
-        .join(sb, "b")
-        .withColumn(
-            "jaccard",
-            F.col("inter") / (F.col("sza") + F.col("szb") - F.col("inter")),
-        )
-        .filter(F.col("jaccard") >= threshold)
-        .select("a", "b", F.round("jaccard", 6).alias("jaccard"))
-    )
+    pairs = capped_overlap(sh, sh, max_shingle_df, pred="<")
+    return jaccard_at_least(attach_sizes(pairs, sh, sh), threshold)
 
 
 # ---------------------------------------------------------------- minhash-lsh
@@ -314,27 +285,15 @@ def lsh_verified_pairs(
     sh = cut_lineage(
         distinct_shingles(documents, n=n, id_col=id_col, text_col=text_col)
     )
-    sizes = sh.groupBy("doc_id").agg(F.count("*").alias("sz"))
     sa = sh.select(F.col("doc_id").alias("a"), "shingle")
     sb = sh.select(F.col("doc_id").alias("b"), "shingle")
     inter = (
         cand.join(sa, "a")
         .join(sb, ["b", "shingle"])
         .groupBy("a", "b")
-        .agg(F.count("*").alias("inter"))
+        .agg(F.count("*").alias("n"))
     )
-    za = sizes.select(F.col("doc_id").alias("a"), F.col("sz").alias("sza"))
-    zb = sizes.select(F.col("doc_id").alias("b"), F.col("sz").alias("szb"))
-    return (
-        inter.join(za, "a")
-        .join(zb, "b")
-        .withColumn(
-            "jaccard",
-            F.col("inter") / (F.col("sza") + F.col("szb") - F.col("inter")),
-        )
-        .filter(F.col("jaccard") >= threshold)
-        .select("a", "b", F.round("jaccard", 6).alias("jaccard"))
-    )
+    return jaccard_at_least(attach_sizes(inter, sh, sh), threshold)
 
 
 # ---------------------------------------------------------------- embedding cosine
@@ -613,9 +572,8 @@ def phash_near_pairs(
         "band", "key", F.col("media_ref").alias("ref_a"),
         *[F.col(f"b{i}").alias(f"a{i}") for i in range(4)],
     )
-    # the b side needs no cap semi-join: the inner join on (band, key)
-    # already restricts pairs to buckets surviving on the capped a side
-    # (same one-side-cap argument as ngram_jaccard_pairs)
+    # the b side stays uncapped: see overlap.capped_overlap for why capping
+    # one side of an equi-join on the capped key is exact
     b = bands.select(
         "band", "key", F.col("media_ref").alias("ref_b"),
         *[F.col(f"b{i}").alias(f"x{i}") for i in range(4)],
@@ -688,27 +646,15 @@ def contamination_pairs(
     small side — eval sets are millions of rows, not 10^12) joined by the
     train side's shingles, then one map-side-combined pair count.  Never
     an all-pairs product.  Shingles appearing in more than
-    ``max_shingle_df`` test documents are dropped from the index before
-    the join — boilerplate n-grams vouch for nothing and would otherwise
-    fan every train doc into every test doc that carries them (same
-    df-cap scheme as ``ngram_jaccard_pairs``).
+    ``max_shingle_df`` test documents are dropped before the join —
+    boilerplate n-grams vouch for nothing and would otherwise fan every
+    train doc into every test doc that carries them (same df-cap scheme
+    as ``ngram_jaccard_pairs``, with df counted on the test side).
     """
     ts = distinct_shingles(test, n=n, id_col=id_col, text_col=text_col)
-    rare = ts.groupBy("shingle").agg(F.count(F.lit(1)).alias("_df")).filter(
-        F.col("_df") <= max_shingle_df
-    )
-    index = (
-        ts.join(rare.select("shingle"), "shingle", "left_semi")
-        .select("shingle", F.col("doc_id").alias("test_doc"))
-    )
-    tr = distinct_shingles(train, n=n, id_col=id_col, text_col=text_col).select(
-        "shingle", F.col("doc_id").alias("train_doc")
-    )
-    return (
-        tr.join(index, "shingle")
-        .groupBy("train_doc", "test_doc")
-        .agg(F.count(F.lit(1)).alias("n_shared"))
-        .filter(F.col("n_shared") >= min_shared)
+    tr = distinct_shingles(train, n=n, id_col=id_col, text_col=text_col)
+    return capped_overlap(tr, ts, max_shingle_df, min_count=min_shared).toDF(
+        "train_doc", "test_doc", "n_shared"
     )
 
 
@@ -874,27 +820,16 @@ def winnow_pairs(
     """
     from .textstats import winnow_fingerprints
 
-    # materialize-once + one-side cap (same rationale as
-    # ngram_jaccard_pairs; the winnowing window scan is the CPU-heavy step)
+    # read by the df-cap, both join sides and the sizes — materialize the
+    # fingerprints once; the winnowing window scan is the CPU-heavy step
     fp = cut_lineage(
         winnow_fingerprints(documents, k=k, w=w, id_col=id_col, text_col=text_col)
     )
-    sizes = fp.groupBy("doc_id").agg(F.count("*").alias("sz"))
-    keep = fp.groupBy("fp").agg(F.count("*").alias("df")).filter(
-        F.col("df") <= max_fp_df
+    shared = capped_overlap(fp, fp, max_fp_df, pred="<", min_count=min_shared)
+    return attach_sizes(shared, fp, fp).select(
+        "a", "b", F.col("n").alias("n_shared"), F.col("sz_a").alias("n_a"),
+        F.col("sz_b").alias("n_b"),
     )
-    a = fp.join(keep.select("fp"), "fp").select(F.col("doc_id").alias("a"), "fp")
-    b = fp.select(F.col("doc_id").alias("b"), "fp")
-    shared = (
-        a.join(b, "fp")
-        .filter(F.col("a") < F.col("b"))
-        .groupBy("a", "b")
-        .agg(F.count("*").alias("n_shared"))
-        .filter(F.col("n_shared") >= min_shared)
-    )
-    sa = sizes.select(F.col("doc_id").alias("a"), F.col("sz").alias("n_a"))
-    sb = sizes.select(F.col("doc_id").alias("b"), F.col("sz").alias("n_b"))
-    return shared.join(sa, "a").join(sb, "b").select("a", "b", "n_shared", "n_a", "n_b")
 
 
 def containment_pairs(
@@ -922,36 +857,18 @@ def containment_pairs(
     attaches are key-partitioned joins.  The ordered output is the same
     pair set materialized both ways, a 2× constant, not a new asymptotic
     term."""
-    # materialize-once + one-side cap, as in ngram_jaccard_pairs (the
-    # inner join restricts pairs to shingles surviving the capped a side,
-    # so the b-side semi-join was computing the identical pair set)
     sh = cut_lineage(
         distinct_shingles(documents, n=n, id_col=id_col, text_col=text_col)
     )
-    sizes = sh.groupBy("doc_id").agg(F.count("*").alias("sz"))
-    df_cap = sh.groupBy("shingle").agg(F.count("*").alias("df")).filter(
-        F.col("df") <= max_shingle_df
-    )
-    a = sh.join(df_cap.select("shingle"), "shingle").select(
-        F.col("doc_id").alias("a"), "shingle"
-    )
-    b = sh.select(F.col("doc_id").alias("b"), "shingle")
-    inter = (
-        a.join(b, "shingle")
-        .filter(F.col("a") != F.col("b"))
-        .groupBy("a", "b")
-        .agg(F.count("*").cast("long").alias("inter"))
-        .filter(F.col("inter") >= min_inter)
-    )
-    sa = sizes.select(F.col("doc_id").alias("a"), F.col("sz").alias("sza"))
-    sb = sizes.select(F.col("doc_id").alias("b"), F.col("sz").alias("szb"))
+    inter = capped_overlap(sh, sh, max_shingle_df, pred="!=", min_count=min_inter)
+    # compare the ratio: the product threshold * sz_a rounds in double
+    # (0.14 * 50 = 7.000000000000001) and drops exact-boundary pairs, while
+    # the rounded quotient is monotone in the exact ratio
     return (
-        inter.join(sa, "a")
-        .join(sb, "b")
-        .filter(F.col("inter") >= F.lit(threshold) * F.col("sza"))
-        .select("a", "b", "inter",
-                F.col("sza").cast("long").alias("sza"),
-                F.col("szb").cast("long").alias("szb"))
+        attach_sizes(inter, sh, sh)
+        .filter(F.col("n") / F.col("sz_a") >= threshold)
+        .select("a", "b", F.col("n").alias("inter"),
+                F.col("sz_a").alias("sza"), F.col("sz_b").alias("szb"))
     )
 
 
@@ -1051,35 +968,9 @@ def incremental_jaccard_pairs(
     else:
         shb = distinct_shingles(base, n=n, id_col=id_col, text_col=text_col)
     shq = distinct_shingles(batch, n=n, id_col=id_col, text_col=text_col)
-    sb = shb.groupBy("doc_id").agg(F.count("*").alias("sz"))
-    sq = shq.groupBy("doc_id").agg(F.count("*").alias("sz"))
-    cap = shb.groupBy("shingle").agg(F.count("*").alias("df")).filter(
-        F.col("df") <= max_shingle_df
-    ).select("shingle")
-    a = shq.join(cap, "shingle").select(F.col("doc_id").alias("batch_id"), "shingle")
-    # The base side needs NO cap semi-join: the inner probe join already
-    # restricts it to shingles surviving on the (capped) batch side, so
-    # capping both sides computed the identical pair set while paying an
-    # extra full exchange + join of the 10^7-row index (a mega-shingle
-    # absent from the capped batch side matches nothing; one present in it
-    # passed the cap by definition).  Guide §2.4: remove shuffles outright.
-    b = shb.select(F.col("doc_id").alias("base_id"), "shingle")
-    inter = (
-        a.join(b, "shingle")
-        .groupBy("batch_id", "base_id")
-        .agg(F.count("*").alias("inter"))
-    )
-    qa = sq.select(F.col("doc_id").alias("batch_id"), F.col("sz").alias("szq"))
-    ba = sb.select(F.col("doc_id").alias("base_id"), F.col("sz").alias("szb"))
-    return (
-        inter.join(qa, "batch_id")
-        .join(ba, "base_id")
-        .withColumn(
-            "jaccard",
-            F.col("inter") / (F.col("szq") + F.col("szb") - F.col("inter")),
-        )
-        .filter(F.col("jaccard") >= threshold)
-        .select("batch_id", "base_id", F.round("jaccard", 6).alias("jaccard"))
+    pairs = capped_overlap(shq, shb, max_shingle_df)
+    return jaccard_at_least(attach_sizes(pairs, shq, shb), threshold).toDF(
+        "batch_id", "base_id", "jaccard"
     )
 
 

@@ -35,6 +35,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..checkpointing import cut_lineage, fixpoint
+from .overlap import attach_sizes, capped_overlap
 
 
 def _undirected(edges: DataFrame) -> DataFrame:
@@ -336,40 +337,23 @@ def link_prediction(
     one map-side-combined groupBy; existing edges are removed by an
     anti-join against the distinct u<v edge set."""
     und = cut_lineage(_undirected(edges))
-    sym = _symmetric(und)
-    deg = cut_lineage(sym.groupBy("u").agg(F.count(F.lit(1)).alias("d")))
-    centers = deg.filter(F.col("d") <= max_center_degree).select(
-        F.col("u").alias("w")
-    )
-    adj = sym.select(F.col("u").alias("w"), F.col("v").alias("n")).join(
-        centers, "w", "left_semi"
-    )
-    adj = cut_lineage(adj)  # referenced twice by the wedge self-join
-    pairs = (
-        adj.select("w", F.col("n").alias("a"))
-        .join(adj.select("w", F.col("n").alias("b")), "w")
-        .filter(F.col("a") < F.col("b"))
-        .groupBy("a", "b")
-        .agg(F.count(F.lit(1)).alias("cn"))
-        .filter(F.col("cn") >= min_common)
+    # (neighbour, center) rows: a center's df is its degree, and so is the
+    # row count of a neighbour id — the symmetric edge set is its own index
+    adj = _symmetric(und).select("v", "u")
+    pairs = capped_overlap(
+        adj, adj, max_center_degree, pred="<", min_count=min_common
     )
     cand = pairs.join(
         und.select(F.col("u").alias("a"), F.col("v").alias("b")),
         ["a", "b"],
         "left_anti",
     )
-    da = deg.select(F.col("u").alias("a"), F.col("d").alias("deg_u"))
-    db = deg.select(F.col("u").alias("b"), F.col("d").alias("deg_v"))
-    return (
-        cand.join(da, "a")
-        .join(db, "b")
-        .select(
-            F.col("a").alias("u"),
-            F.col("b").alias("v"),
-            "cn",
-            "deg_u",
-            "deg_v",
-        )
+    return attach_sizes(cand, adj, adj).select(
+        F.col("a").alias("u"),
+        F.col("b").alias("v"),
+        F.col("n").alias("cn"),
+        F.col("sz_a").alias("deg_u"),
+        F.col("sz_b").alias("deg_v"),
     )
 
 

@@ -24,6 +24,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from .overlap import capped_overlap
+
 # GFM forms (widened per round-4 advice): headings and list bullets allow
 # up to 3 leading SPACES (4+ = code block; tabs excluded by the spec),
 # bullets are -/*/+, and the checked mark is case-insensitive x.  The
@@ -175,24 +177,14 @@ def fuzzy_link_suggestions(
         .filter(F.length("s") >= 3)
         .select(F.col("s").alias("c"), F.explode(grams).alias("g"))
     )
-    df_cap = (
-        cand.groupBy("g").agg(F.count("*").alias("df"))
-        .filter(F.col("df") <= max_gram_df)
-        .select("g")
-    )
-    t = t.join(df_cap, "g")
-    cand = cand.join(df_cap, "g")
-    pairs = (
-        t.join(cand, "g")
-        .groupBy(F.col("s").alias("raw_target"), F.col("c").alias("candidate"))
-        .agg(F.count("*").cast("long").alias("n_shared"))
-        .filter(F.col("n_shared") >= min_shared)
-    )
+    pairs = capped_overlap(
+        t, cand, max_gram_df, pred="!=", min_count=min_shared
+    ).toDF("raw_target", "candidate", "n_shared")
     return pairs.withColumn(
         "lev", F.levenshtein("raw_target", "candidate").cast("long")
-    ).filter(
-        (F.col("lev") <= max_lev) & (F.col("raw_target") != F.col("candidate"))
-    ).select("raw_target", "candidate", "lev", "n_shared")
+    ).filter(F.col("lev") <= max_lev).select(
+        "raw_target", "candidate", "lev", "n_shared"
+    )
 
 
 def section_mention_counts(content_df: DataFrame) -> DataFrame:

@@ -111,6 +111,24 @@ def test_semdedup_oversized_guard_keeps_everything(spark):
     assert all(r["oversized"] and r["is_kept"] for r in out)
 
 
+def test_ngram_jaccard_exact_copy_and_cap(spark):
+    from obsidian_parser_spark.operators.dedup import ngram_jaccard_pairs
+
+    # docs 1, 2: an exact copy whose 3 shingles have df 2; docs 3-5 share
+    # their one shingle at df 3; doc 6 is unrelated
+    docs = spark.createDataFrame(
+        [(1, "one two three four five"), (2, "One two three four five"),
+         (3, "x y z"), (4, "x y z"), (5, "x y z"), (6, "one two six")],
+        "doc_id long, text string",
+    )
+    got = sorted(map(tuple, ngram_jaccard_pairs(docs).collect()))
+    assert got == [(1, 2, 1.0), (3, 4, 1.0), (3, 5, 1.0), (4, 5, 1.0)]
+    # cap 2: the df-2 shingles sit at the cap and still pair; the df-3
+    # shingle is one over and drops
+    got = sorted(map(tuple, ngram_jaccard_pairs(docs, max_shingle_df=2).collect()))
+    assert got == [(1, 2, 1.0)]
+
+
 def test_winnow_pairs_guarantee_and_cap(spark):
     """Docs sharing an 8-token passage pair up; the df-cap drops a
     fingerprint present in every doc (boilerplate)."""

@@ -186,6 +186,21 @@ def test_containment_exact_copy_both_directions(spark):
     assert got == {(1, 2), (2, 1)}  # mutual containment, both orders
 
 
+def test_containment_keeps_exact_boundary_ratio(spark):
+    # doc 1: 52 distinct words → 50 shingles; doc 2 is its first 9 words →
+    # 7 shingles, all in doc 1.  7/50 == 0.14 exactly, while the product
+    # 0.14 * 50 rounds to 7.000000000000001 in double
+    words = [f"w{i}" for i in range(52)]
+    docs = spark.createDataFrame(
+        [(1, " ".join(words)), (2, " ".join(words[:9]))], "doc_id long, text string"
+    )
+    got = {
+        (r["a"], r["b"]): (r["inter"], r["sza"], r["szb"])
+        for r in containment_pairs(docs, threshold=0.14).collect()
+    }
+    assert got == {(1, 2): (7, 50, 7), (2, 1): (7, 7, 50)}
+
+
 # --- co-citation / incremental dedup ----------------------------------------
 
 
@@ -202,6 +217,12 @@ def test_cocitation_dual_of_coupling(spark):
     )
     got = [tuple(r) for r in cocitation_pairs(edges).collect()]
     assert got == [("x", "y", 2)]
+    # source df cap: s1 (2 distinct targets) sits at the cap and is kept,
+    # s2 (3 targets) is one over and drops — else (x, z), (y, z) appear
+    # and (x, y) counts 2
+    got = [tuple(r) for r in cocitation_pairs(
+        edges, min_shared=1, max_source_df=2).collect()]
+    assert got == [("x", "y", 1)]
 
 
 def test_incremental_pairs_batch_vs_base_only(spark):
@@ -220,6 +241,22 @@ def test_incremental_pairs_batch_vs_base_only(spark):
     # the batch copy pairs with BOTH identical base docs — but the two
     # identical base docs never pair with each other (no base self-join)
     assert got == [(100, 1, 1.0), (100, 2, 1.0)]
+
+    # shingle df is counted on the base only: "p q r" is in three batch
+    # docs but one base doc, so it pairs under cap 1; "x y z" is in two
+    # base docs, so it drops although the batch holds it once
+    base = spark.createDataFrame(
+        [(1, "p q r"), (2, "x y z"), (3, "x y z")], "doc_id long, text string"
+    )
+    batch = spark.createDataFrame(
+        [(100, "p q r"), (101, "p q r"), (102, "p q r"), (103, "x y z")],
+        "doc_id long, text string",
+    )
+    got = sorted(
+        tuple(r) for r in incremental_jaccard_pairs(
+            base, batch, max_shingle_df=1).collect()
+    )
+    assert got == [(100, 1, 1.0), (101, 1, 1.0), (102, 1, 1.0)]
 
 
 def test_incremental_index_cache_revalidates_after_clearcache(spark):
