@@ -17,6 +17,7 @@ Column names/types are aligned on both sides (BIGINT ints, DOUBLE floats).
 
 from __future__ import annotations
 
+import json
 import os
 import re
 import sys
@@ -66,6 +67,29 @@ def _sf_name(sf_dir: str) -> str:
 
 def _vault_path(sf_dir: str) -> str:
     return ensure_vault_corpus(_sf_name(sf_dir))
+
+
+def _cache_key(base: str, params: dict) -> dict:
+    # a stream sink's _spark_metadata log and checkpoint hold absolute file
+    # URIs, so output that was copied or moved from another path reads as
+    # empty there — the absolute path is part of what the marker pins
+    return {**params, "base": os.path.abspath(base)}
+
+
+def _cache_done(base: str, params: dict) -> bool:
+    """True iff ``base`` holds the finished output of a run with ``params``
+    generated at this very path (its ``_DONE.json`` marker matches)."""
+    try:
+        with open(os.path.join(base, "_DONE.json")) as f:
+            return json.load(f) == _cache_key(base, params)
+    except (OSError, ValueError):
+        return False
+
+
+def _mark_cache_done(base: str, params: dict) -> None:
+    """Pin ``base``'s output as finished for ``params`` at this path."""
+    with open(os.path.join(base, "_DONE.json"), "w") as f:
+        json.dump(_cache_key(base, params), f)
 
 
 def _graph(spark: SparkSession, sf_dir: str):
@@ -1144,7 +1168,6 @@ def _q_kg_stream_edges(spark, sf_dir):
     is pytest-gated instead).  Idempotent: a marker pins the finished
     replay, so re-invocations just read the edges table."""
     import glob
-    import json
     import shutil
 
     from obsidian_parser_spark.operators.linking import build_alias_dict
@@ -1155,13 +1178,8 @@ def _q_kg_stream_edges(spark, sf_dir):
     base = os.path.join(os.path.dirname(path), "stream_replay")
     in_dir = os.path.join(base, "in")
     out_dir = os.path.join(base, "out")
-    marker = os.path.join(base, "_REPLAYED.json")
     params = {"version": 1, "src": path, "epochs": 3}
-    done = False
-    if os.path.exists(marker):
-        with open(marker) as f:
-            done = json.load(f) == params
-    if not done:
+    if not _cache_done(base, params):
         shutil.rmtree(base, ignore_errors=True)
         os.makedirs(in_dir, exist_ok=True)
         docs = spark.read.parquet(path)
@@ -1194,8 +1212,7 @@ def _q_kg_stream_edges(spark, sf_dir):
         if not q.awaitTermination(600):
             q.stop()
             raise RuntimeError("stream replay did not finish within 600s")
-        with open(marker, "w") as f:
-            json.dump(params, f)
+        _mark_cache_done(base, params)
     return spark.read.parquet(os.path.join(out_dir, "edges")).select(
         "subj", "pred", "obj"
     )
@@ -1212,22 +1229,16 @@ def _q_kg_resume(spark, sf_dir):
     (n_buckets=8, 2 re-processed / 6 skipped) + corpus totals the oracle
     re-derives independently from the span parquet + equality booleans the
     oracle pins TRUE."""
-    import json
     import shutil
 
     from obsidian_parser_spark.plans.materialize import materialize_graph
 
     path = _vault_path(sf_dir)
     base = os.path.join(os.path.dirname(path), "resume_check")
-    marker = os.path.join(base, "_DONE.json")
     params = {"version": 1, "src": path, "n_buckets": 8, "crashed": [0, 1]}
-    done = False
-    if os.path.exists(marker):
-        with open(marker) as f:
-            done = json.load(f) == params
     n_buckets, crashed = 8, [0, 1]
     result_pq = os.path.join(base, "audit")
-    if not done:
+    if not _cache_done(base, params):
         shutil.rmtree(base, ignore_errors=True)
         docs = spark.read.parquet(path)
         dir_a = os.path.join(base, "run_a")
@@ -1274,8 +1285,7 @@ def _q_kg_resume(spark, sf_dir):
             "total_edges long, total_dangling long, manifest_matches_full boolean",
         )
         audit.coalesce(1).write.mode("overwrite").parquet(result_pq)
-        with open(marker, "w") as f:
-            json.dump(params, f)
+        _mark_cache_done(base, params)
     return spark.read.parquet(result_pq)
 
 
@@ -1289,21 +1299,15 @@ def _q_ev_stream_windowed(spark, sf_dir):
     double value sums stay with the batch ev_windowed row (cents-rounded
     there).  Idempotent via marker; checkpoint state and watermark persist
     across re-runs."""
-    import json
     import shutil
 
     from obsidian_parser_spark.streaming.incremental import windowed_event_counts
 
     src = os.path.join(sf_dir, "events.parquet")
     base = os.path.join(os.path.dirname(_vault_path(sf_dir)), "ev_stream")
-    marker = os.path.join(base, "_DONE.json")
     out = os.path.join(base, "win")
     params = {"version": 1, "src": src}
-    done = False
-    if os.path.exists(marker):
-        with open(marker) as f:
-            done = json.load(f) == params
-    if not done:
+    if not _cache_done(base, params):
         shutil.rmtree(base, ignore_errors=True)
         in_dir = os.path.join(base, "in")
         os.makedirs(in_dir)
@@ -1317,8 +1321,7 @@ def _q_ev_stream_windowed(spark, sf_dir):
         if not q.awaitTermination(600):
             q.stop()
             raise RuntimeError("windowed stream did not finish within 600s")
-        with open(marker, "w") as f:
-            json.dump(params, f)
+        _mark_cache_done(base, params)
     return spark.read.parquet(out).select(
         F.unix_micros(F.col("window.start")).alias("window_start_us"),
         "event_type",
@@ -1339,7 +1342,6 @@ def _q_ev_stream_join_outer(spark, sf_dir):
     oracle re-derives matched pairs as a plain range join and the NULL
     set as l_us + horizon < min(max click, max purchase) ms-truncated
     − horizon.  Idempotent via marker."""
-    import json
     import shutil
 
     from obsidian_parser_spark.streaming.incremental import (
@@ -1351,13 +1353,8 @@ def _q_ev_stream_join_outer(spark, sf_dir):
     )
     in_dir = os.path.join(base, "in")
     out_dir = os.path.join(base, "out")
-    marker = os.path.join(base, "_DONE.json")
     params = {"version": 2, "sf": sf_dir}
-    done = False
-    if os.path.exists(marker):
-        with open(marker) as f:
-            done = json.load(f) == params
-    if not done:
+    if not _cache_done(base, params):
         shutil.rmtree(base, ignore_errors=True)
         ev = _events(spark, sf_dir).select(
             "event_id", "ts", "user_id", "event_type"
@@ -1391,8 +1388,7 @@ def _q_ev_stream_join_outer(spark, sf_dir):
         if not q.awaitTermination(600):
             q.stop()
             raise RuntimeError("outer stream join did not finish within 600s")
-        with open(marker, "w") as f:
-            json.dump(params, f)
+        _mark_cache_done(base, params)
     return spark.read.parquet(out_dir).select(
         "l_id", "r_id", "user_id", "lag_us"
     )
@@ -1414,7 +1410,6 @@ def _q_ev_stream_late(spark, sf_dir):
     closure set computed over the ORIGINAL events only; a watermark
     enforcement failure double-counts epoch 0 and the hash breaks.
     Idempotent via marker."""
-    import json
     import shutil
 
     from obsidian_parser_spark.streaming.incremental import (
@@ -1424,13 +1419,8 @@ def _q_ev_stream_late(spark, sf_dir):
     base = os.path.join(os.path.dirname(_vault_path(sf_dir)), "ev_stream_late")
     in_dir = os.path.join(base, "in")
     out = os.path.join(base, "win")
-    marker = os.path.join(base, "_DONE.json")
     params = {"version": 3, "sf": sf_dir}
-    done = False
-    if os.path.exists(marker):
-        with open(marker) as f:
-            done = json.load(f) == params
-    if not done:
+    if not _cache_done(base, params):
         shutil.rmtree(base, ignore_errors=True)
         ev = _events(spark, sf_dir)
         cut1, cut2 = _event_time_cuts(spark, sf_dir)
@@ -1467,8 +1457,7 @@ def _q_ev_stream_late(spark, sf_dir):
         if not q.awaitTermination(600):
             q.stop()
             raise RuntimeError("late-data stream did not finish within 600s")
-        with open(marker, "w") as f:
-            json.dump(params, f)
+        _mark_cache_done(base, params)
     return spark.read.parquet(out).select(
         F.unix_micros(F.col("window.start")).alias("window_start_us"),
         "event_type",
@@ -1488,7 +1477,6 @@ def _q_ev_stream_join_resume(spark, sf_dir):
     batch range join as ev_stream_join: two independent executions
     (single-process and cross-process) pinned to one truth.  Idempotent
     via marker."""
-    import json
     import shutil
     import subprocess
     import sys
@@ -1504,13 +1492,8 @@ def _q_ev_stream_join_resume(spark, sf_dir):
     in_dir = os.path.join(base, "in")
     out_dir = os.path.join(base, "out")
     ckpt = os.path.join(base, "ckpt")
-    marker = os.path.join(base, "_DONE.json")
     params = {"version": 2, "sf": sf_dir}
-    done = False
-    if os.path.exists(marker):
-        with open(marker) as f:
-            done = json.load(f) == params
-    if not done:
+    if not _cache_done(base, params):
         shutil.rmtree(base, ignore_errors=True)
         ev = _events(spark, sf_dir).select(
             "event_id", "ts", "user_id", "event_type"
@@ -1627,8 +1610,7 @@ def _q_ev_stream_join_resume(spark, sf_dir):
         if not q.awaitTermination(600):
             q.stop()
             raise RuntimeError("resumed join stream did not finish in 600s")
-        with open(marker, "w") as f:
-            json.dump(params, f)
+        _mark_cache_done(base, params)
     return spark.read.parquet(out_dir).select(
         "l_id", "r_id", "user_id", "lag_us"
     )
@@ -1642,21 +1624,15 @@ def _q_ev_stream_sessions(spark, sf_dir):
     (new session iff the same-user gap ≥ 30 min — the end-exclusive
     [ts, ts+gap) span) and the closure set (end ms ≤ max event time ms
     − 2 h) in SQL.  Integer cents; idempotent via marker."""
-    import json
     import shutil
 
     from obsidian_parser_spark.streaming.incremental import session_stream
 
     src = os.path.join(sf_dir, "events.parquet")
     base = os.path.join(os.path.dirname(_vault_path(sf_dir)), "ev_sessions")
-    marker = os.path.join(base, "_DONE.json")
     out = os.path.join(base, "win")
     params = {"version": 1, "src": src}
-    done = False
-    if os.path.exists(marker):
-        with open(marker) as f:
-            done = json.load(f) == params
-    if not done:
+    if not _cache_done(base, params):
         shutil.rmtree(base, ignore_errors=True)
         in_dir = os.path.join(base, "in")
         os.makedirs(in_dir)
@@ -1670,8 +1646,7 @@ def _q_ev_stream_sessions(spark, sf_dir):
         if not q.awaitTermination(600):
             q.stop()
             raise RuntimeError("session stream did not finish within 600s")
-        with open(marker, "w") as f:
-            json.dump(params, f)
+        _mark_cache_done(base, params)
     return spark.read.parquet(out).select(
         "user_id",
         F.unix_micros(F.col("session_window.start")).alias("session_start_us"),
@@ -1693,7 +1668,6 @@ def _q_dd_stream(spark, sf_dir):
     identity inside a micro-batch is task-order-dependent, so the gate
     pins the count, the quantity watermark-dedup actually guarantees).
     Idempotent via marker."""
-    import json
     import shutil
 
     from obsidian_parser_spark.streaming.incremental import dedup_stream
@@ -1701,13 +1675,8 @@ def _q_dd_stream(spark, sf_dir):
     base = os.path.join(os.path.dirname(_vault_path(sf_dir)), "dd_stream")
     in_dir = os.path.join(base, "in")
     out_dir = os.path.join(base, "out")
-    marker = os.path.join(base, "_DONE.json")
     params = {"version": 1, "sf": sf_dir}
-    done = False
-    if os.path.exists(marker):
-        with open(marker) as f:
-            done = json.load(f) == params
-    if not done:
+    if not _cache_done(base, params):
         shutil.rmtree(base, ignore_errors=True)
         os.makedirs(in_dir)
         corpus = _dedup_corpus(spark, sf_dir)
@@ -1754,8 +1723,7 @@ def _q_dd_stream(spark, sf_dir):
         if not q.awaitTermination(600):
             q.stop()
             raise RuntimeError("dedup stream did not finish within 600s")
-        with open(marker, "w") as f:
-            json.dump(params, f)
+        _mark_cache_done(base, params)
     kept = (
         spark.read.parquet(out_dir)
         .groupBy(F.md5("text").alias("h"))
@@ -1809,7 +1777,6 @@ def _q_ev_stream_join(spark, sf_dir):
     state; because epochs are time-ordered no row is ever late, so the
     streaming result must equal the batch range join bit-for-bit — the
     oracle is a plain SQL interval self-join.  Idempotent via marker."""
-    import json
     import shutil
 
     from obsidian_parser_spark.streaming.incremental import (
@@ -1819,13 +1786,8 @@ def _q_ev_stream_join(spark, sf_dir):
     base = os.path.join(os.path.dirname(_vault_path(sf_dir)), "ev_stream_join")
     in_dir = os.path.join(base, "in")
     out_dir = os.path.join(base, "out")
-    marker = os.path.join(base, "_DONE.json")
     params = {"version": 2, "sf": sf_dir}
-    done = False
-    if os.path.exists(marker):
-        with open(marker) as f:
-            done = json.load(f) == params
-    if not done:
+    if not _cache_done(base, params):
         shutil.rmtree(base, ignore_errors=True)
         ev = _events(spark, sf_dir).select(
             "event_id", "ts", "user_id", "event_type"
@@ -1859,8 +1821,7 @@ def _q_ev_stream_join(spark, sf_dir):
         if not q.awaitTermination(600):
             q.stop()
             raise RuntimeError("stream-stream join did not finish within 600s")
-        with open(marker, "w") as f:
-            json.dump(params, f)
+        _mark_cache_done(base, params)
     return spark.read.parquet(out_dir).select(
         "l_id", "r_id", "user_id", "lag_us"
     )
@@ -1878,7 +1839,6 @@ def _q_kg_stream_stateful(spark, sf_dir):
     them from SQL while the engine must get cross-batch state
     restoration right to match.  Idempotent via marker."""
     import glob as _glob
-    import json
     import shutil
 
     from obsidian_parser_spark.operators.sampling import hash_bucket
@@ -1887,13 +1847,8 @@ def _q_kg_stream_stateful(spark, sf_dir):
     base = os.path.join(os.path.dirname(_vault_path(sf_dir)), "stateful_replay")
     in_dir = os.path.join(base, "in")
     out_dir = os.path.join(base, "out")
-    marker = os.path.join(base, "_DONE.json")
     params = {"version": 1, "sf": sf_dir}
-    done = False
-    if os.path.exists(marker):
-        with open(marker) as f:
-            done = json.load(f) == params
-    if not done:
+    if not _cache_done(base, params):
         shutil.rmtree(base, ignore_errors=True)
         os.makedirs(in_dir)
         g = _graph(spark, sf_dir)
@@ -1935,8 +1890,7 @@ def _q_kg_stream_stateful(spark, sf_dir):
         if not q.awaitTermination(600):
             q.stop()
             raise RuntimeError("stateful stream did not finish within 600s")
-        with open(marker, "w") as f:
-            json.dump(params, f)
+        _mark_cache_done(base, params)
     upd = spark.read.parquet(out_dir)
     return upd.groupBy("obj").agg(
         F.max("backlinks").cast("long").alias("backlinks"),
@@ -1956,7 +1910,6 @@ def _q_kg_stream_dict(spark, sf_dir):
     epoch's mentions against its own version — growing-dictionary
     semantics verified edge-for-edge.  Idempotent via marker."""
     import glob as _glob
-    import json
     import shutil
 
     from obsidian_parser_spark.operators.sampling import hash_bucket
@@ -1966,13 +1919,8 @@ def _q_kg_stream_dict(spark, sf_dir):
     base = os.path.join(os.path.dirname(path), "dict_replay")
     in_dir = os.path.join(base, "in")
     out_dir = os.path.join(base, "out")
-    marker = os.path.join(base, "_DONE.json")
     params = {"version": 1, "src": path}
-    done = False
-    if os.path.exists(marker):
-        with open(marker) as f:
-            done = json.load(f) == params
-    if not done:
+    if not _cache_done(base, params):
         shutil.rmtree(base, ignore_errors=True)
         os.makedirs(in_dir)
         docs = spark.read.parquet(path)
@@ -1996,8 +1944,7 @@ def _q_kg_stream_dict(spark, sf_dir):
         if not q.awaitTermination(600):
             q.stop()
             raise RuntimeError("dict stream did not finish within 600s")
-        with open(marker, "w") as f:
-            json.dump(params, f)
+        _mark_cache_done(base, params)
     return spark.read.parquet(os.path.join(out_dir, "edges")).select(
         "subj", "pred", "obj"
     )
@@ -2021,7 +1968,6 @@ def _q_kg_stream_resume(spark, sf_dir):
     independent executions (single-process and cross-process) pinned to
     one truth.  Idempotent via marker."""
     import glob as _glob
-    import json
     import shutil
     import subprocess
     import sys
@@ -2034,13 +1980,8 @@ def _q_kg_stream_resume(spark, sf_dir):
     in_dir = os.path.join(base, "in")
     out_dir = os.path.join(base, "out")
     ckpt = os.path.join(base, "ckpt")
-    marker = os.path.join(base, "_DONE.json")
     params = {"version": 1, "sf": sf_dir}
-    done = False
-    if os.path.exists(marker):
-        with open(marker) as f:
-            done = json.load(f) == params
-    if not done:
+    if not _cache_done(base, params):
         shutil.rmtree(base, ignore_errors=True)
         os.makedirs(in_dir)
         g = _graph(spark, sf_dir)
@@ -2134,8 +2075,7 @@ def _q_kg_stream_resume(spark, sf_dir):
         if not q.awaitTermination(600):
             q.stop()
             raise RuntimeError("resumed stream did not finish within 600s")
-        with open(marker, "w") as f:
-            json.dump(params, f)
+        _mark_cache_done(base, params)
     upd = spark.read.parquet(out_dir)
     return upd.groupBy("obj").agg(
         F.max("backlinks").cast("long").alias("backlinks"),

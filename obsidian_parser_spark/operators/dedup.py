@@ -872,33 +872,6 @@ def containment_pairs(
     )
 
 
-# Base-index persist cache for incremental_jaccard_pairs, keyed by
-# (analyzed base plan, shingle params) so repeat ingests against the SAME
-# base reuse the persisted index instead of evicting it (the documented
-# ~3x win), and guarded by a lock so concurrent pipelines can't race the
-# evict.  Bounded FIFO: evicting unpersists an index an older returned
-# frame may still reference — that frame silently recomputes (lineage-
-# safe), it never breaks.
-_INDEX_CACHE_LOCK = __import__("threading").Lock()
-_CACHED_INDEXES: dict = {}
-_INDEX_CACHE_CAP = 4
-
-
-def _index_cache_key(base: DataFrame, n: int, id_col: str, text_col: str):
-    try:
-        plan = base._jdf.queryExecution().analyzed().toString()
-    except Exception:  # private API moved — fall back to identity (no reuse)
-        import logging
-
-        logging.getLogger(__name__).warning(
-            "incremental_jaccard_pairs: plan-based index-cache key "
-            "unavailable (private API moved); falling back to object "
-            "identity — cross-call index reuse disabled"
-        )
-        plan = str(id(base))
-    return (plan, n, id_col, text_col)
-
-
 def incremental_jaccard_pairs(
     base: DataFrame,
     batch: DataFrame,
@@ -907,7 +880,6 @@ def incremental_jaccard_pairs(
     max_shingle_df: int = 1000,
     id_col: str = "doc_id",
     text_col: str = "text",
-    persist_index: bool = True,
 ) -> DataFrame:
     """INCREMENTAL dedup — the production ingest shape: near-duplicate
     pairs between an INCOMING ``batch`` and the EXISTING ``base`` corpus
@@ -917,56 +889,22 @@ def incremental_jaccard_pairs(
     what dd_ngram_jaccard becomes once the corpus is too big to re-scan
     per ingest.
 
-    Scale shape: the base side is exactly the persisted shingle inverted
-    index a production deployment maintains (df-capped on the BASE
-    distribution, the stable one); the batch side probes it with one
-    key-partitioned equi-join, and the intersection count + two size
-    attaches are the same map-side-combined aggs as the batch-free
-    version.  Nothing here is quadratic in either side.
+    Scale shape: the base side is the shingle inverted index a
+    production deployment maintains (df-capped on the BASE distribution,
+    the stable one); the batch side probes it with one key-partitioned
+    equi-join, and the intersection count + two size attaches are the
+    same map-side-combined aggs as the batch-free version.  Nothing here
+    is quadratic in either side.
 
-    ``persist_index`` caches the base shingle frame: three consumers
-    (sizes, df-cap, probe join) read it, and regenerating shingles is
-    the CPU-heavy step (measured 59.5 s → ~20 s on the 100k-doc vault
-    bench).  In production the base index is a MATERIALIZED table
-    maintained across ingests — the cache is the single-job stand-in.
-    The cache is keyed by (base plan, shingle params) under a lock, so
-    repeat ingests against the SAME base (the bench's repeat=2, the
-    driver's reruns) REUSE the persisted index instead of rebuilding it
-    and concurrent pipelines can't race the eviction; capacity is a
-    small FIFO so distinct bases don't pin unbounded executor memory
-    (eviction unpersists — lineage-safe, an older returned frame just
-    recomputes)."""
-    if persist_index:
-        key = _index_cache_key(base, n, id_col, text_col)
-        with _INDEX_CACHE_LOCK:
-            shb = _CACHED_INDEXES.get(key)
-        # storageLevel is a py4j round-trip into the CacheManager — read it
-        # OUTSIDE the lock so concurrent pipelines don't serialize on the
-        # JVM call (round-5 advice), then re-check the entry under the lock
-        # before mutating.
-        stale = shb is not None and not (
-            shb.storageLevel.useMemory or shb.storageLevel.useDisk
-        )
-        with _INDEX_CACHE_LOCK:
-            if stale and _CACHED_INDEXES.get(key) is shb:
-                # an external spark.catalog.clearCache() (the bench does
-                # this between passes) unpersists the frame but leaves the
-                # dict entry: a stale hit would silently recompute the
-                # index at EVERY consumption (it is read twice per action
-                # below) — strictly worse than no cache.  Re-validate and
-                # rebuild.
-                del _CACHED_INDEXES[key]
-            if stale:
-                shb = _CACHED_INDEXES.get(key)
-            if shb is None:
-                while len(_CACHED_INDEXES) >= _INDEX_CACHE_CAP:
-                    _CACHED_INDEXES.pop(next(iter(_CACHED_INDEXES))).unpersist()
-                shb = distinct_shingles(
-                    base, n=n, id_col=id_col, text_col=text_col
-                ).persist()
-                _CACHED_INDEXES[key] = shb
-    else:
-        shb = distinct_shingles(base, n=n, id_col=id_col, text_col=text_col)
+    The base index is read three times (df-cap, probe join, sizes) and
+    shingling is the CPU-heavy step, so it is cut once per call — the
+    same materialization as ``ngram_jaccard_pairs``.  Nothing is cached
+    across calls: the cut belongs to the returned frame's lineage (Spark's
+    context cleaner drops it once that frame is garbage), so repeated
+    ingests leave no cache-manager entry behind."""
+    shb = cut_lineage(
+        distinct_shingles(base, n=n, id_col=id_col, text_col=text_col)
+    )
     shq = distinct_shingles(batch, n=n, id_col=id_col, text_col=text_col)
     pairs = capped_overlap(shq, shb, max_shingle_df)
     return jaccard_at_least(attach_sizes(pairs, shq, shb), threshold).toDF(

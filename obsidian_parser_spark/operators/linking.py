@@ -498,15 +498,15 @@ def unlinked_mentions(
             .groupBy("subj", "obj")
             .agg(F.sum("n").alias("n_mentions"))
         )
-    # the hit frame is tiny (≤ one row per (doc, matched name)) but costs a
-    # full corpus pass to produce, and BOTH the df-cap branch and the main
-    # join read it — persist so the token scan runs once per action, not
-    # twice (lazy cache: concurrent consumers in one job dedup partition
-    # computation via the block manager; measured: one ~2 s pass saved at
-    # sf0.1).  The frame is hits-only, so the cached footprint is tiny.
-    m = m.persist()
-    df_counts = m.groupBy("obj").agg(F.count(F.lit(1)).alias("_df"))
-    m = m.join(df_counts, "obj").filter(F.col("_df") <= max_df).drop("_df")
+    # df-cap as a window count over the hit frame itself: m holds at most
+    # one row per (subj, obj), so counting rows per obj IS the name's
+    # document frequency.  m then has a single consumer, so the costly
+    # token scan runs once per action without any persist.
+    m = (
+        m.withColumn("_df", F.count(F.lit(1)).over(Window.partitionBy("obj")))
+        .filter(F.col("_df") <= max_df)
+        .drop("_df")
+    )
     linked = link_edges.select("subj", "obj").distinct()
     return m.join(linked, ["subj", "obj"], "left_anti").select(
         "subj", "obj", "n_mentions"

@@ -196,104 +196,115 @@ def materialize_graph(
     # --- phase 2 input: pending buckets only (filter pushes to the scan)
     sub = docs.filter(F.col("bucket").isin(pending))
     notes = tokenize_documents(sub, include_mdlinks=opts.include_mdlinks).persist()
-
-    # --- phase 1: global alias dictionary — built ONCE per run and
-    # persisted; a resume reloads it instead of re-tokenizing the corpus.
-    # On a fresh run (all buckets pending) the pending notes ARE the corpus,
-    # so the tokenize stage runs exactly once.  A PARTIAL resume with the
-    # dict parquet missing fails LOUDLY instead of silently re-tokenizing
-    # the full corpus — the expensive stage the manifest exists to skip;
-    # pass rebuild_dict=True to explicitly pay that cost.
+    # both persists are released on EVERY exit — a refused partial resume
+    # or a failed write must not leave them pinned in a long-lived session
+    edges_b = None
     try:
-        alias_dict = spark.read.parquet(dict_path)
-    except Exception:
-        if len(pending) != n_buckets and not rebuild_dict:
-            raise RuntimeError(
-                f"partial resume (buckets {sorted(done)} done) but the "
-                f"persisted alias dict is missing at {dict_path}; refusing "
-                "to silently re-tokenize the full corpus — restore the dict "
-                "or pass rebuild_dict=True"
-            ) from None
-        dict_src = (
-            notes
-            if len(pending) == n_buckets
-            else tokenize_documents(docs, include_mdlinks=opts.include_mdlinks)
+        # --- phase 1: global alias dictionary — built ONCE per run and
+        # persisted; a resume reloads it instead of re-tokenizing the corpus.
+        # On a fresh run (all buckets pending) the pending notes ARE the
+        # corpus, so the tokenize stage runs exactly once.  A PARTIAL resume
+        # with the dict parquet missing fails LOUDLY instead of silently
+        # re-tokenizing the full corpus — the expensive stage the manifest
+        # exists to skip; pass rebuild_dict=True to explicitly pay that cost.
+        try:
+            alias_dict = spark.read.parquet(dict_path)
+        except Exception:
+            if len(pending) != n_buckets and not rebuild_dict:
+                raise RuntimeError(
+                    f"partial resume (buckets {sorted(done)} done) but the "
+                    f"persisted alias dict is missing at {dict_path}; refusing "
+                    "to silently re-tokenize the full corpus — restore the dict "
+                    "or pass rebuild_dict=True"
+                ) from None
+            dict_src = (
+                notes
+                if len(pending) == n_buckets
+                else tokenize_documents(docs, include_mdlinks=opts.include_mdlinks)
+            )
+            build_alias_dict(dict_src, use_aliases=opts.use_aliases).write.mode(
+                "overwrite"
+            ).parquet(dict_path)
+            alias_dict = spark.read.parquet(dict_path)
+
+        notes_b = notes.withColumn("bucket", _bucket("doc_id", n_buckets))
+
+        mentions = mentions_from_notes(notes)
+        edges, dangling = resolve_mentions(
+            mentions, alias_dict, use_aliases=opts.use_aliases
         )
-        build_alias_dict(dict_src, use_aliases=opts.use_aliases).write.mode(
-            "overwrite"
-        ).parquet(dict_path)
-        alias_dict = spark.read.parquet(dict_path)
+        if opts.include_tag_triples:
+            edges = edges.unionByName(tag_triples(notes))
+        edges_b = edges.withColumn("bucket", _bucket("subj", n_buckets)).persist()
 
-    notes_b = notes.withColumn("bucket", _bucket("doc_id", n_buckets))
-
-    mentions = mentions_from_notes(notes)
-    edges, dangling = resolve_mentions(mentions, alias_dict, use_aliases=opts.use_aliases)
-    if opts.include_tag_triples:
-        edges = edges.unionByName(tag_triples(notes))
-    edges_b = edges.withColumn("bucket", _bucket("subj", n_buckets)).persist()
-
-    # dynamic partition overwrite = Iceberg overwritePartitions semantics:
-    # a retried bucket REPLACES its own partition, so a bucket that was
-    # half-written when the job died is rewritten exactly once on resume.
-    (
-        notes_b.drop("mentions")
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("bucket")
-        .parquet(nodes_path)
-    )
-    (
-        edges_b.write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("bucket")
-        .parquet(edges_path)
-    )
-
-    # --- phase 3: lineage manifest (per-bucket metrics + checksum)
-    dang_b = dangling.withColumn("bucket", _bucket("subj", n_buckets))
-    m_docs = notes_b.groupBy("bucket").agg(F.count("*").alias("n_docs"))
-    # two-phase salted aggregation (hub-skew-proof metric path)
-    m_edges = (
-        edges_b.groupBy("bucket", F.pmod(F.xxhash64("obj"), F.lit(32)).alias("_s"))
-        .agg(
-            F.count("*").alias("_c"),
-            F.sum(F.xxhash64("subj", "pred", "obj").cast("decimal(38,0)")).alias("_h"),
+        # dynamic partition overwrite = Iceberg overwritePartitions semantics:
+        # a retried bucket REPLACES its own partition, so a bucket that was
+        # half-written when the job died is rewritten exactly once on resume.
+        (
+            notes_b.drop("mentions")
+            .write.mode("overwrite")
+            .option("partitionOverwriteMode", "dynamic")
+            .partitionBy("bucket")
+            .parquet(nodes_path)
         )
-        .groupBy("bucket")
-        .agg(F.sum("_c").alias("n_edges"), F.sum("_h").alias("edges_checksum"))
-    )
-    m_dang = dang_b.groupBy("bucket").agg(F.count("*").alias("n_dangling"))
-    manifest = (
-        m_docs.join(m_edges, "bucket", "left")
-        .join(m_dang, "bucket", "left")
-        .select(
-            F.lit(run_id).alias("run_id"),
-            F.col("bucket").cast("int"),
-            F.col("n_docs").cast("long"),
-            F.coalesce("n_edges", F.lit(0)).cast("long").alias("n_edges"),
-            F.coalesce("n_dangling", F.lit(0)).cast("long").alias("n_dangling"),
-            F.coalesce("edges_checksum", F.lit(0))
-            .cast("decimal(38,0)")
-            .alias("edges_checksum"),
-            F.lit("done").alias("status"),
-            F.lit(time.time()).alias("finished_at"),
+        (
+            edges_b.write.mode("overwrite")
+            .option("partitionOverwriteMode", "dynamic")
+            .partitionBy("bucket")
+            .parquet(edges_path)
         )
-    )
-    # buckets with zero docs still need a done row
-    present = {r.bucket for r in manifest.select("bucket").collect()}
-    missing = [b for b in pending if b not in present]
-    if missing:
-        from decimal import Decimal
 
-        empty = spark.createDataFrame(
-            [(run_id, b, 0, 0, 0, Decimal(0), "done", time.time()) for b in missing],
-            MANIFEST_SCHEMA,
+        # --- phase 3: lineage manifest (per-bucket metrics + checksum)
+        dang_b = dangling.withColumn("bucket", _bucket("subj", n_buckets))
+        m_docs = notes_b.groupBy("bucket").agg(F.count("*").alias("n_docs"))
+        # two-phase salted aggregation (hub-skew-proof metric path)
+        m_edges = (
+            edges_b.groupBy(
+                "bucket", F.pmod(F.xxhash64("obj"), F.lit(32)).alias("_s")
+            )
+            .agg(
+                F.count("*").alias("_c"),
+                F.sum(
+                    F.xxhash64("subj", "pred", "obj").cast("decimal(38,0)")
+                ).alias("_h"),
+            )
+            .groupBy("bucket")
+            .agg(F.sum("_c").alias("n_edges"), F.sum("_h").alias("edges_checksum"))
         )
-        manifest = manifest.unionByName(empty)
-    _append_manifest(manifest, manifest_path)
+        m_dang = dang_b.groupBy("bucket").agg(F.count("*").alias("n_dangling"))
+        manifest = (
+            m_docs.join(m_edges, "bucket", "left")
+            .join(m_dang, "bucket", "left")
+            .select(
+                F.lit(run_id).alias("run_id"),
+                F.col("bucket").cast("int"),
+                F.col("n_docs").cast("long"),
+                F.coalesce("n_edges", F.lit(0)).cast("long").alias("n_edges"),
+                F.coalesce("n_dangling", F.lit(0)).cast("long").alias("n_dangling"),
+                F.coalesce("edges_checksum", F.lit(0))
+                .cast("decimal(38,0)")
+                .alias("edges_checksum"),
+                F.lit("done").alias("status"),
+                F.lit(time.time()).alias("finished_at"),
+            )
+        )
+        # buckets with zero docs still need a done row
+        present = {r.bucket for r in manifest.select("bucket").collect()}
+        missing = [b for b in pending if b not in present]
+        if missing:
+            from decimal import Decimal
 
-    notes.unpersist()
-    edges_b.unpersist()
+            empty = spark.createDataFrame(
+                [(run_id, b, 0, 0, 0, Decimal(0), "done", time.time())
+                 for b in missing],
+                MANIFEST_SCHEMA,
+            )
+            manifest = manifest.unionByName(empty)
+        _append_manifest(manifest, manifest_path)
+    finally:
+        notes.unpersist()
+        if edges_b is not None:
+            edges_b.unpersist()
     return MaterializeResult(
         nodes_path, edges_path, manifest_path, pending, sorted(done)
     )

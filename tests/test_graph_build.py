@@ -258,6 +258,12 @@ def test_unlinked_mentions_anti_join_self_and_df_cap(spark):
     assert out == {("a", "b"): 2, ("d", "b"): 1}
     # df-cap: pre-anti-join 'b' is mentioned by 3 distinct docs (a, c, d)
     assert unlinked_mentions(docs, dict_df, linked, max_df=2).count() == 0
+    # a name exactly at the cap is kept
+    out = {
+        (r["subj"], r["obj"]): r["n_mentions"]
+        for r in unlinked_mentions(docs, dict_df, linked, max_df=3).collect()
+    }
+    assert out == {("a", "b"): 2, ("d", "b"): 1}
 
 
 def test_alias_conflicts_surfaces_first_wins_losers(spark):

@@ -88,8 +88,11 @@ def test_partial_resume_missing_dict_fails_loudly(spark, tmp_path):
     spark.createDataFrame(kept_rows, manifest.schema).write.parquet(r1.manifest_path)
     shutil.rmtree(f"{out}/alias_dict_rY")
 
+    spark.catalog.clearCache()
     with pytest.raises(RuntimeError, match="alias dict is missing"):
         materialize_graph(spark, docs, out, run_id="rY", n_buckets=4)
+    # the refused resume releases its persisted notes
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
     # explicit opt-in rebuild completes the run
     r2 = materialize_graph(
         spark, docs, out, run_id="rY", n_buckets=4, rebuild_dict=True

@@ -115,3 +115,25 @@ def test_kcore_oracle_rounds_converged(con):
         outs.append(con.execute(sql).fetchall())
     assert outs[0] == outs[1]
     assert len(outs[0]) > 0  # non-vacuous at this scale
+
+
+def test_query_cache_marker_is_path_bound(tmp_path):
+    """A stream query's cached sink output is only reusable where it was
+    generated: its ``_spark_metadata`` log holds absolute file URIs, so a
+    copied or moved tree must report not-done and regenerate."""
+    import shutil
+
+    params = {"version": 1, "sf": "/data/sf0.001"}
+    a = tmp_path / "a" / "dd_stream"
+    a.mkdir(parents=True)
+    assert not E._cache_done(str(a), params)
+    E._mark_cache_done(str(a), params)
+    assert E._cache_done(str(a), params)
+    assert not E._cache_done(str(a), {**params, "version": 2})
+
+    b = tmp_path / "b" / "dd_stream"
+    shutil.copytree(tmp_path / "a", tmp_path / "b")
+    assert (b / "_DONE.json").exists()
+    assert not E._cache_done(str(b), params)
+    # the original location still reads as done
+    assert E._cache_done(str(a), params)

@@ -259,50 +259,42 @@ def test_incremental_pairs_batch_vs_base_only(spark):
     assert got == [(100, 1, 1.0), (101, 1, 1.0), (102, 1, 1.0)]
 
 
-def test_incremental_index_cache_revalidates_after_clearcache(spark):
-    """An external spark.catalog.clearCache() (the bench does this between
-    passes) unpersists the cached base index but leaves the dict entry —
-    the next call must detect the stale hit and re-persist, never return
-    an unpersisted frame (which would recompute the index at every one of
-    its two consumptions per action)."""
-    from obsidian_parser_spark.operators import dedup as DD
+def test_repeated_dedup_and_mention_calls_leave_no_cache(spark):
+    """Operators own no cache across calls: repeated incremental dedup and
+    unlinked-mention calls (both dictionary paths) leave the session's
+    CacheManager empty, and a repeat returns the same rows."""
+    from obsidian_parser_spark.operators.dedup import incremental_jaccard_pairs
+    from obsidian_parser_spark.operators.linking import unlinked_mentions
 
-    # hermetic: earlier tests in the shared session may have left entries
-    # (possibly already unpersisted by their own teardown) whose params
-    # match the filter below — drop them so assertions see only this
-    # test's entry.  Pop-and-unpersist each entry (round-5 advice) so the
-    # shared session doesn't keep their cached blocks if a later
-    # assertion fails before the test's own clearCache runs.
-    with DD._INDEX_CACHE_LOCK:
-        while DD._CACHED_INDEXES:
-            DD._CACHED_INDEXES.popitem()[1].unpersist()
-
+    spark.catalog.clearCache()
     t = "one two three four five six"
     base = spark.createDataFrame(
         [(1, t), (2, "unrelated words entirely here")],
         "doc_id long, text string",
     )
     batch = spark.createDataFrame([(100, t)], "doc_id long, text string")
+    first = sorted(incremental_jaccard_pairs(base, batch).collect())
+    assert first == sorted(incremental_jaccard_pairs(base, batch).collect())
+    assert [tuple(r) for r in first] == [(100, 1, 1.0)]
 
-    DD.incremental_jaccard_pairs(base, batch, persist_index=True).collect()
-    with DD._INDEX_CACHE_LOCK:
-        cached = [
-            v for k, v in DD._CACHED_INDEXES.items() if k[1:] == (3, "doc_id", "text")
-        ]
-    assert cached and all(
-        v.storageLevel.useMemory or v.storageLevel.useDisk for v in cached
+    docs = spark.createDataFrame(
+        [("a", [("text", "see b and b today", None, 0)]),
+         ("d", [("text", "b!", None, 0)])],
+        "doc_id string, spans array<struct<kind string, text string, "
+        "media_ref string, offset long>>",
     )
+    dict_df = spark.createDataFrame(
+        [(x, "short", x) for x in "abd"],
+        "alias string, kind string, canonical string",
+    )
+    linked = spark.createDataFrame([], "subj string, pred string, obj string")
+    for broadcast_dict in (True, False):
+        got = unlinked_mentions(
+            docs, dict_df, linked, broadcast_dict=broadcast_dict
+        ).collect()
+        assert sorted(map(tuple, got)) == [("a", "b", 2), ("d", "b", 1)]
 
-    spark.catalog.clearCache()  # unpersists everything, dict entry goes stale
-
-    DD.incremental_jaccard_pairs(base, batch, persist_index=True).collect()
-    with DD._INDEX_CACHE_LOCK:
-        cached = [
-            v for k, v in DD._CACHED_INDEXES.items() if k[1:] == (3, "doc_id", "text")
-        ]
-    assert cached and all(
-        v.storageLevel.useMemory or v.storageLevel.useDisk for v in cached
-    ), "stale cache entry survived clearCache without re-persist"
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
 
 
 # --- randomized parity (seeded, like test_components' random graphs) ---------
