@@ -5232,6 +5232,7 @@ mod_agg AS (
                 OR ends_with(lower(coalesce(media_ref, '')), '.jpg')
                 OR ends_with(lower(coalesce(media_ref, '')), '.jpeg')
                 OR ends_with(lower(coalesce(media_ref, '')), '.gif')
+                OR ends_with(lower(coalesce(media_ref, '')), '.bmp')
               THEN 1 ELSE 0 END)::BIGINT AS n_image,
          sum(CASE WHEN ends_with(lower(coalesce(media_ref, '')), '.mp3')
                 OR ends_with(lower(coalesce(media_ref, '')), '.wav')

@@ -33,6 +33,7 @@ from pyspark.sql import functions as F
 
 from ..checkpointing import cut_lineage
 from .overlap import attach_sizes, capped_overlap, jaccard_at_least
+from .textstats import _TOKENS
 
 # ---------------------------------------------------------------- exact
 
@@ -52,8 +53,6 @@ def exact_duplicates(documents: DataFrame, id_col: str = "doc_id", text_col: str
 
 # ---------------------------------------------------------------- shingles
 
-_TOKENS = "filter(split(lower({text}), '\\\\s+'), t -> t != '')"
-
 
 def shingles(
     documents: DataFrame, n: int = 3, id_col: str = "doc_id", text_col: str = "text"
@@ -72,7 +71,7 @@ def shingles(
 
     toks = documents.select(
         F.col(id_col).alias("doc_id"),
-        F.expr(_TOKENS.format(text=text_col)).alias("_t"),
+        F.expr(_TOKENS.format(t=text_col)).alias("_t"),
     )
     ng = NGram(n=n, inputCol="_t", outputCol="_ng")
     return ng.transform(toks).select(
@@ -103,7 +102,7 @@ def distinct_shingles(
 
     toks = documents.select(
         F.col(id_col).alias("doc_id"),
-        F.expr(_TOKENS.format(text=text_col)).alias("_t"),
+        F.expr(_TOKENS.format(t=text_col)).alias("_t"),
     )
     ng = NGram(n=n, inputCol="_t", outputCol="_ng")
     return ng.transform(toks).select(
@@ -405,7 +404,7 @@ def simhash_signatures(
     """
     toks = documents.select(
         F.col(id_col).alias("doc_id"),
-        F.explode(F.expr(_TOKENS.format(text=text_col))).alias("token"),
+        F.explode(F.expr(_TOKENS.format(t=text_col))).alias("token"),
     )
     if hash_fn == "md5":
         # hex nibble i = chars of md5[0:16]; bit j = bit (3 - j%4) of

@@ -2,39 +2,48 @@
 
 Media enters as ``kind='media'``/``kind='embed'`` spans carrying an opaque
 ``media_ref``, plus (for payload-bearing tables) a ``binary`` column.
-The Spark-side plumbing — schema, batch shape, partitioning, Arrow
-transfer — is real and tested, and for PNG, GIF, BMP and WAV the DECODE
-itself is real too: all four carry their metadata in fixed headers
-parseable with stdlib ``struct`` from the first bytes (no PIL/ffmpeg
-needed) — PNG signature + IHDR width/height (big-endian), GIF logical
-screen descriptor width/height (little-endian) + positional block walk
-for frame counts, BMP BITMAPINFOHEADER width/height (little-endian) over
-an uncompressed raster, WAV RIFF/fmt byte-rate + data size → duration.
-Formats whose
-metadata needs a real codec (jpeg/mp4/...) remain DECLARED STUBS behind
-``strict=True`` (default: an ``ok=false`` error-channel row — one stray
-.jpg in a 10^12-row table must not kill the job), since no image/audio
-libraries exist in this container:
+
+The eight payload operators (``decode_media_payloads``,
+``gif_frame_stats``, ``image_channel_stats``, ``audio_sample_stats``,
+``thumbnail_row_stats``, ``image_ahash``, ``audio_frame_features``,
+``gif_frame_samples``) are each one ``{ext: decoder}`` table, one output
+schema and one error-row tail, run by ``_map_payloads``: a single
+Arrow-batched ``mapInPandas`` pass over ``(media_ref, payload)``, no
+shuffle.  Per row the pass parses the ref's extension, looks up the
+decoder and calls it on the payload bytes; the decoder returns the row
+tails, or None for a corrupt payload — an ``ok=false`` error-channel row,
+never a thrown task.  An extension with no decoder takes the same error
+channel (one stray .jpg in a 10^12-row table must not kill the job)
+unless ``strict=True``, which raises the declared codec stub.
+
+PNG, GIF, BMP and WAV decode for real with stdlib ``struct``/``zlib`` and
+numpy (no PIL/ffmpeg): PNG signature + IHDR + inflated IDAT raster, GIF
+logical screen descriptor + positional block walk + LZW, BMP
+BITMAPINFOHEADER over an uncompressed raster, WAV RIFF/fmt header + 16-bit
+PCM body.  Formats whose decode needs a real codec (jpeg/mp4/...) remain
+declared stubs.  A format is added with one decoder-table entry in each
+operator that should read it — the pass, schema and partitioning don't
+change.
+
+Outside that pass, keyed by ``(doc_id, media_ref)`` without payloads:
 
 * ``decode_media``           — ``fake=True`` (default): deterministic
   md5-derived "decode" so downstream operators are testable without
-  payloads; ``fake=False`` + ``payload_col``: REAL header parse for
-  .png/.wav via ``decode_media_payloads``; ``fake=False`` without a
-  payload column raises (declared stub).
+  payloads; ``fake=False`` + ``payload_col``: the real decode of
+  ``decode_media_payloads``; ``fake=False`` without a payload column
+  raises (declared stub).
 * ``extract_features``       — deterministic fake embedding (16 floats from
   md5 bytes), same mapInPandas shape a real CLIP/wav2vec stage would use.
 * ``sample_frames``          — deterministic frame-offset plan for videos.
-
-To productionize the remaining formats: add the codec call beside
-``_parse_png``/``_parse_wav`` inside the same ``mapInPandas`` iterator —
-the schema and partitioning don't change.
+* ``modality_stats``         — per-document span counts by media type.
 """
 
 from __future__ import annotations
 
 import hashlib
 import struct
-from collections.abc import Iterator
+from collections.abc import Callable, Iterator
+from typing import Any
 
 import numpy as np
 import pandas as pd
@@ -56,7 +65,83 @@ GIF_FRAMES_SCHEMA = (
 FEATURES_SCHEMA = "doc_id string, media_ref string, features array<float>"
 FRAMES_SCHEMA = "doc_id string, media_ref string, frame_ms array<long>"
 
+# media type by extension: read by ``_media_type`` (Python) and by
+# ``modality_stats`` (its SQL counts), so the two cannot disagree
+_MEDIA_TYPES = {
+    "png": "image", "jpg": "image", "jpeg": "image", "gif": "image",
+    "bmp": "image",
+    "mp3": "audio", "wav": "audio", "flac": "audio",
+    "mp4": "video", "mkv": "video", "webm": "video",
+}
+
 _PNG_SIG = b"\x89PNG\r\n\x1a\n"
+
+# a decoder maps payload bytes to the operator's row tails (the columns
+# after media_ref; a list, since one payload may give many rows or none),
+# or to None for the error channel
+Decoder = Callable[[bytes], "list[tuple] | None"]
+
+
+def _ext(ref: str) -> str:
+    return ref.rsplit(".", 1)[-1].lower() if "." in ref else ""
+
+
+def _media_type(ref: str) -> str:
+    return _MEDIA_TYPES.get(_ext(ref), "unknown")
+
+
+def _decoder(
+    parse: Callable[[bytes], Any], tails: Callable[[Any], "list[tuple] | None"]
+) -> Decoder:
+    """A decoder-table entry: ``tails`` of the parsed payload, or None
+    (the error channel) when ``parse`` rejects the bytes."""
+
+    def decode(b: bytes) -> list[tuple] | None:
+        parsed = parse(b)
+        return None if parsed is None else tails(parsed)
+
+    return decode
+
+
+def _map_payloads(
+    media: DataFrame,
+    payload_col: str,
+    schema: str,
+    decoders: dict[str, Decoder],
+    bad: Callable[[str], tuple],
+    strict: bool = False,
+) -> DataFrame:
+    """The payload pass: one Arrow-batched mapInPandas over
+    ``(media_ref, payload)``.  Each row's extension selects its decoder
+    in ``decoders``; the decoder's row tails become rows
+    ``(media_ref, *tail)``.  A NULL payload decodes as b"", which every
+    decoder fails closed.  The error channel — a decoder returning None,
+    or an extension with no decoder — appends the single row
+    ``(media_ref, *bad(media_ref))``; under ``strict`` an extension with
+    no decoder raises the declared codec stub instead."""
+    columns = [field.split()[0] for field in schema.split(",")]
+
+    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            rows = []
+            for ref, payload in zip(pdf["media_ref"], pdf[payload_col]):
+                ext = _ext(ref)
+                dec = decoders.get(ext)
+                if dec is None and strict:
+                    raise NotImplementedError(
+                        f"real media decode for '.{ext}' requires a codec "
+                        "library (PIL/ffmpeg), which the engine does not "
+                        f"bundle; {'/'.join(decoders)} decode natively"
+                    )
+                tails = None if dec is None else dec(
+                    b"" if payload is None else bytes(payload)
+                )
+                rows.extend(
+                    (ref, *tail) for tail in ([bad(ref)] if tails is None else tails)
+                )
+            yield pd.DataFrame(rows, columns=columns)
+
+    return media.select("media_ref", payload_col).mapInPandas(run, schema)
 
 
 def _parse_png(b: bytes) -> tuple[int, int] | None:
@@ -78,42 +163,6 @@ def _parse_gif(b: bytes) -> tuple[int, int] | None:
         return None
     w, h = struct.unpack("<HH", b[6:10])
     return w, h
-
-
-def _gif_frame_count(b: bytes) -> int | None:
-    """Number of image descriptors (frames) by walking the block stream —
-    no LZW decompression needed: extensions (0x21) and image data are
-    length-prefixed sub-blocks that can be skipped positionally.  None on
-    a malformed stream (truncated block, unknown introducer)."""
-    if _parse_gif(b) is None:
-        return None
-    pos = 10
-    packed = b[10]
-    # global color table: 3 * 2^(N+1) bytes when flag bit 7 is set
-    pos = 13 + (3 << ((packed & 0x07) + 1) if packed & 0x80 else 0)
-    frames = 0
-    while pos < len(b):
-        introducer = b[pos]
-        if introducer == 0x3B:  # trailer
-            return frames
-        if introducer == 0x21:  # extension: label + sub-blocks
-            pos += 2
-            while pos < len(b) and b[pos] != 0:
-                pos += 1 + b[pos]
-            pos += 1
-        elif introducer == 0x2C:  # image descriptor
-            if pos + 10 > len(b):
-                return None
-            lpacked = b[pos + 9]
-            pos += 10 + (3 << ((lpacked & 0x07) + 1) if lpacked & 0x80 else 0)
-            pos += 1  # LZW minimum code size byte
-            while pos < len(b) and b[pos] != 0:
-                pos += 1 + b[pos]
-            pos += 1
-            frames += 1
-        else:
-            return None
-    return None  # ran off the end without a trailer
 
 
 def _parse_bmp(b: bytes) -> tuple[int, int] | None:
@@ -155,6 +204,21 @@ def _parse_wav(b: bytes) -> int | None:
     return data_size * 1000 // byte_rate
 
 
+def _wav_pcm16(b: bytes) -> "tuple[int, np.ndarray] | None":
+    """(sample_rate, int64 samples) off a 16-bit PCM WAV's data chunk —
+    little-endian int16 read with numpy.  None outside the 16-bit subset
+    or on a data chunk shorter than its declared size."""
+    if _parse_wav(b) is None:
+        return None
+    bits = struct.unpack("<H", b[34:36])[0]
+    data_size = struct.unpack("<I", b[40:44])[0]
+    body = b[44 : 44 + data_size]
+    if bits != 16 or len(body) != data_size or data_size % 2:
+        return None
+    rate = struct.unpack("<I", b[24:28])[0]
+    return rate, np.frombuffer(body, dtype="<i2").astype(np.int64)
+
+
 def decode_media_payloads(
     media: DataFrame, payload_col: str = "payload", strict: bool = False
 ) -> DataFrame:
@@ -169,60 +233,29 @@ def decode_media_payloads(
     * ``.wav`` → duration_ms from the RIFF header, width/height 0;
     * corrupt payload of a supported extension → ``ok=false``, NULL metrics
       (the error channel — never a thrown task);
-    * any OTHER extension → ``ok=false`` row by default (one stray .jpg in
-      a 10^12-row table must not kill the job); ``strict=True`` restores
-      the loud NotImplementedError (declared stub: jpeg/mp4 metadata needs
-      a real codec library, absent in this image).
+    * any OTHER extension → ``ok=false`` row (``media_type`` still set
+      from the extension) by default; ``strict=True`` restores the loud
+      NotImplementedError (declared stub: jpeg/mp4 metadata needs a real
+      codec library).
 
     Arrow-batched mapInPandas, one pass, no shuffle — the same plumbing a
     PIL/ffmpeg deployment would use."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for ref, payload in zip(pdf["media_ref"], pdf[payload_col]):
-                mt = _media_type(ref)
-                ext = ref.rsplit(".", 1)[-1].lower() if "." in ref else ""
-                b = bytes(payload) if payload is not None else b""
-                if ext == "png":
-                    wh = _parse_png(b)
-                    if wh is None:
-                        rows.append((ref, mt, None, None, None, False))
-                    else:
-                        rows.append((ref, mt, wh[0], wh[1], 0, True))
-                elif ext == "gif":
-                    wh = _parse_gif(b)
-                    if wh is None:
-                        rows.append((ref, mt, None, None, None, False))
-                    else:
-                        rows.append((ref, mt, wh[0], wh[1], 0, True))
-                elif ext == "bmp":
-                    wh = _parse_bmp(b)
-                    if wh is None:
-                        rows.append((ref, mt, None, None, None, False))
-                    else:
-                        rows.append((ref, mt, wh[0], wh[1], 0, True))
-                elif ext == "wav":
-                    dur = _parse_wav(b)
-                    if dur is None:
-                        rows.append((ref, mt, None, None, None, False))
-                    else:
-                        rows.append((ref, mt, 0, 0, dur, True))
-                elif strict:
-                    raise NotImplementedError(
-                        f"real media decode for '.{ext}' requires PIL/ffmpeg "
-                        "(not in this image); png/gif/wav parse headers natively"
-                    )
-                else:
-                    rows.append((ref, mt, None, None, None, False))
-            yield pd.DataFrame(
-                rows,
-                columns=["media_ref", "media_type", "width", "height",
-                         "duration_ms", "ok"],
-            )
+    def image(wh: tuple[int, int]) -> list[tuple]:
+        return [("image", wh[0], wh[1], 0, True)]
 
-    return media.select("media_ref", payload_col).mapInPandas(
-        run, PAYLOAD_DECODED_SCHEMA
+    return _map_payloads(
+        media,
+        payload_col,
+        PAYLOAD_DECODED_SCHEMA,
+        {
+            "png": _decoder(_parse_png, image),
+            "gif": _decoder(_parse_gif, image),
+            "bmp": _decoder(_parse_bmp, image),
+            "wav": _decoder(_parse_wav, lambda dur: [("audio", 0, 0, dur, True)]),
+        },
+        lambda ref: (_media_type(ref), None, None, None, False),
+        strict,
     )
 
 
@@ -231,37 +264,21 @@ def gif_frame_stats(media: DataFrame, payload_col: str = "payload") -> DataFrame
     n_frames, ok) — image descriptors counted positionally off the
     length-prefixed sub-block structure (no LZW inflate needed), so an
     independent engine can recompute n_frames from the generation rule and
-    verify the walk EXACTLY.  Non-gif extensions and malformed streams →
-    ok=false rows (error channel)."""
+    verify the walk EXACTLY.  A frame with no color table still counts.
+    Non-gif extensions and malformed streams → ok=false rows (error
+    channel)."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for ref, payload in zip(pdf["media_ref"], pdf[payload_col]):
-                b = bytes(payload) if payload is not None else b""
-                wh = _parse_gif(b) if ref.lower().endswith(".gif") else None
-                nf = _gif_frame_count(b) if wh is not None else None
-                if wh is None or nf is None:
-                    rows.append((ref, None, None, None, False))
-                else:
-                    rows.append((ref, wh[0], wh[1], nf, True))
-            yield pd.DataFrame(
-                rows, columns=["media_ref", "width", "height", "n_frames", "ok"]
-            )
+    def count(walked: tuple) -> list[tuple]:
+        width, height, frames = walked
+        return [(width, height, len(frames), True)]
 
-    return media.select("media_ref", payload_col).mapInPandas(
-        run, GIF_FRAMES_SCHEMA
+    return _map_payloads(
+        media,
+        payload_col,
+        GIF_FRAMES_SCHEMA,
+        {"gif": _decoder(_gif_frames_raw, count)},
+        lambda ref: (None, None, None, False),
     )
-
-
-def _media_type(ref: str) -> str:
-    ext = ref.rsplit(".", 1)[-1].lower() if "." in ref else ""
-    return {
-        "png": "image", "jpg": "image", "jpeg": "image", "gif": "image",
-        "bmp": "image",
-        "mp3": "audio", "wav": "audio", "flac": "audio",
-        "mp4": "video", "mkv": "video", "webm": "video",
-    }.get(ext, "unknown")
 
 
 def _fake_decode(ref: str) -> tuple[int, int, int]:
@@ -278,8 +295,8 @@ def decode_media(
     """(doc_id, media_ref) → decoded metadata.
 
     ``fake=False`` with ``payload_col`` set routes to the REAL header
-    decode (``decode_media_payloads`` — png/gif/wav parsed natively, other
-    extensions ok=false rows, or the declared codec stub under
+    decode (``decode_media_payloads`` — png/gif/bmp/wav parsed natively,
+    other extensions ok=false rows, or the declared codec stub under
     ``strict=True``); ``fake=False`` without payload bytes raises: there
     is nothing to decode from a bare ref."""
     if not fake and payload_col is not None:
@@ -290,8 +307,8 @@ def decode_media(
             if not fake:
                 raise NotImplementedError(
                     "real decode needs payload bytes: pass payload_col= "
-                    "(png/wav parse natively; other formats need PIL/ffmpeg, "
-                    "not in this image — use fake=True for the stub)"
+                    "(png/gif/bmp/wav parse natively; other formats need "
+                    "PIL/ffmpeg — use fake=True for the stub)"
                 )
             rows = []
             for doc_id, ref in zip(pdf["doc_id"], pdf["media_ref"]):
@@ -376,17 +393,6 @@ def _png_raster(b: bytes) -> "np.ndarray | None":
     return arr[:, 1:].reshape(height, width, 3)
 
 
-def _decode_png_pixels(b: bytes) -> tuple[int, int, int, int, int] | None:
-    """(width, height, sum_r, sum_g, sum_b) over the real PNG raster —
-    exact integer channel sums; None on corrupt/unsupported payloads."""
-    px = _png_raster(b)
-    if px is None:
-        return None
-    h, w = px.shape[0], px.shape[1]
-    s = px.astype(np.int64).sum(axis=(0, 1))
-    return w, h, int(s[0]), int(s[1]), int(s[2])
-
-
 def _bmp_raster(b: bytes) -> "np.ndarray | None":
     """REAL raster decode for the 24-bit uncompressed BMP subset: read the
     raster straight off the pixel-array offset (no decompression at all),
@@ -409,18 +415,14 @@ def _bmp_raster(b: bytes) -> "np.ndarray | None":
     return px[::-1, :, ::-1]  # bottom-up BGR → top-down RGB
 
 
-def _decode_bmp_pixels(b: bytes) -> tuple[int, int, int, int, int] | None:
-    """(width, height, sum_r, sum_g, sum_b) over the real BMP raster —
-    exact integer channel sums (orientation doesn't affect sums, but the
-    BGR→RGB mapping does: a swapped mapping gives wrong per-channel
-    integers and fails the oracle hash).  None outside the subset /
-    corrupt."""
-    px = _bmp_raster(b)
-    if px is None:
-        return None
+def _channel_sums(px: "np.ndarray") -> list[tuple]:
+    """[(width, height, n_px, sum_r, sum_g, sum_b, ok)] over a decoded
+    (h, w, 3) PNG/BMP raster — exact integer channel sums (orientation
+    doesn't affect sums, but BMP's BGR→RGB mapping does: a swapped
+    mapping gives wrong per-channel integers and fails the oracle hash)."""
     h, w = px.shape[0], px.shape[1]
     s = px.astype(np.int64).sum(axis=(0, 1))
-    return w, h, int(s[0]), int(s[1]), int(s[2])
+    return [(w, h, w * h, int(s[0]), int(s[1]), int(s[2]), True)]
 
 
 def _gif_lzw_decode(data: bytes, min_code_size: int) -> list[int] | None:
@@ -480,15 +482,18 @@ def _gif_lzw_decode(data: bytes, min_code_size: int) -> list[int] | None:
 
 def _gif_frames_raw(
     b: bytes,
-) -> "tuple[int, int, list[tuple[int, int, np.ndarray, bytes, int]]] | None":
-    """STRUCTURAL walk of a palette GIF's block stream WITHOUT touching
-    the LZW bits: → (width, height, frames) where each frame is
-    (fw, fh, palette, lzw_bytes, min_code_size).  Local color tables
-    override the global one per frame.  Separating the (cheap) walk from
-    the (expensive) LZW decode is what makes frame SAMPLING sub-linear in
+) -> "tuple[int, int, list[tuple[int, int, np.ndarray | None, bytes, int]]] | None":
+    """STRUCTURAL walk of a GIF's block stream WITHOUT touching the LZW
+    bits: → (width, height, frames) where each frame is (fw, fh, palette,
+    lzw_bytes, min_code_size).  Extensions (0x21) and image data are
+    length-prefixed sub-blocks skipped positionally.  Local color tables
+    override the global one per frame; a frame with neither has palette
+    None (the walk still counts it, the pixel paths fail closed on it —
+    see ``_gif_pixel_frames``).  Separating the (cheap) walk from the
+    (expensive) LZW decode is what makes frame SAMPLING sub-linear in
     frame count — a sampler decodes only the frames it keeps.  None on
-    structurally corrupt streams — the error channel, not an
-    exception."""
+    structurally corrupt streams (truncated block, unknown introducer,
+    no trailer) — the error channel, not an exception."""
     wh = _parse_gif(b)
     if wh is None or len(b) < 13:
         return None
@@ -502,7 +507,7 @@ def _gif_frames_raw(
             return None
         gct = np.frombuffer(b, np.uint8, 3 * n, pos).reshape(n, 3)
         pos += 3 * n
-    frames: list[tuple[int, int, np.ndarray, bytes, int]] = []
+    frames: list[tuple[int, int, np.ndarray | None, bytes, int]] = []
     while pos < len(b):
         introducer = b[pos]
         if introducer == 0x3B:
@@ -525,7 +530,7 @@ def _gif_frames_raw(
                     return None
                 pal = np.frombuffer(b, np.uint8, 3 * n, pos).reshape(n, 3)
                 pos += 3 * n
-            if pal is None or pos >= len(b):
+            if pos >= len(b):
                 return None
             mcs = b[pos]
             pos += 1
@@ -541,6 +546,18 @@ def _gif_frames_raw(
         else:
             return None
     return None  # ran off the end without a trailer
+
+
+def _gif_pixel_frames(
+    b: bytes,
+) -> "tuple[int, int, list[tuple[int, int, np.ndarray, bytes, int]]] | None":
+    """``_gif_frames_raw`` for the pixel paths: a frame without a color
+    table has no colors, so the whole payload fails closed (None) — even
+    when a sampler would not decode that frame."""
+    walked = _gif_frames_raw(b)
+    if walked is None or any(frame[2] is None for frame in walked[2]):
+        return None
+    return walked
 
 
 def _gif_frame_indices(
@@ -568,7 +585,7 @@ def _decode_gif_pixels(
     ALL frames.  Interlace only permutes row order, which channel sums
     don't see.  None on corrupt streams / frame size mismatch — the error
     channel, not an exception."""
-    walked = _gif_frames_raw(b)
+    walked = _gif_pixel_frames(b)
     if walked is None:
         return None
     width, height, frames = walked
@@ -598,43 +615,18 @@ def image_channel_stats(
     extensions → ok=false rows (error channel; a stray .jpg must not kill
     the job) unless ``strict=True``, which raises the declared codec
     stub.  Corrupt/unsupported payloads → ok=false row."""
-    decoders = {
-        "png": _decode_png_pixels,
-        "bmp": _decode_bmp_pixels,
-        "gif": _decode_gif_pixels,
-    }
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for ref, payload in zip(pdf["media_ref"], pdf[payload_col]):
-                ext = ref.rsplit(".", 1)[-1].lower() if "." in ref else ""
-                dec = decoders.get(ext)
-                if dec is None:
-                    if strict:
-                        raise NotImplementedError(
-                            f"pixel decode for '.{ext}' requires a codec "
-                            "library (not in this image); png/bmp decode "
-                            "natively"
-                        )
-                    rows.append((ref, None, None, None, None, None, None, False))
-                    continue
-                out = dec(bytes(payload) if payload is not None else b"")
-                if out is None:
-                    rows.append((ref, None, None, None, None, None, None, False))
-                elif len(out) == 5:  # single-frame formats: n_px = w*h
-                    w, h, sr, sg, sb = out
-                    rows.append((ref, w, h, w * h, sr, sg, sb, True))
-                else:  # gif: n_px summed over frames
-                    w, h, npx, sr, sg, sb = out
-                    rows.append((ref, w, h, npx, sr, sg, sb, True))
-            yield pd.DataFrame(
-                rows,
-                columns=["media_ref", "width", "height", "n_px",
-                         "sum_r", "sum_g", "sum_b", "ok"],
-            )
-
-    return media.select("media_ref", payload_col).mapInPandas(run, PIXELS_SCHEMA)
+    return _map_payloads(
+        media,
+        payload_col,
+        PIXELS_SCHEMA,
+        {
+            "png": _decoder(_png_raster, _channel_sums),
+            "bmp": _decoder(_bmp_raster, _channel_sums),
+            "gif": _decoder(_decode_gif_pixels, lambda sums: [(*sums, True)]),
+        },
+        lambda ref: (None, None, None, None, None, None, False),
+        strict,
+    )
 
 
 def audio_sample_stats(
@@ -648,64 +640,48 @@ def audio_sample_stats(
     extensions → ok=false rows unless ``strict=True`` (declared codec
     stub)."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for ref, payload in zip(pdf["media_ref"], pdf[payload_col]):
-                ext = ref.rsplit(".", 1)[-1].lower() if "." in ref else ""
-                if ext != "wav":
-                    if strict:
-                        raise NotImplementedError(
-                            f"sample decode for '.{ext}' requires a codec "
-                            "library (not in this image); wav decodes natively"
-                        )
-                    rows.append((ref, None, None, None, False))
-                    continue
-                b = bytes(payload) if payload is not None else b""
-                if _parse_wav(b) is None:
-                    rows.append((ref, None, None, None, False))
-                    continue
-                bits = struct.unpack("<H", b[34:36])[0]
-                data_size = struct.unpack("<I", b[40:44])[0]
-                rate = struct.unpack("<I", b[24:28])[0]
-                body = b[44 : 44 + data_size]
-                if bits != 16 or len(body) != data_size or data_size % 2:
-                    rows.append((ref, None, None, None, False))
-                    continue
-                samples = np.frombuffer(body, dtype="<i2")
-                rows.append(
-                    (ref, len(samples), int(samples.astype(np.int64).sum()),
-                     rate, True)
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=["media_ref", "n_samples", "sum_amp", "sample_rate", "ok"],
-            )
+    def stats(pcm: "tuple[int, np.ndarray]") -> list[tuple]:
+        rate, s = pcm
+        return [(len(s), int(s.sum()), rate, True)]
 
-    return media.select("media_ref", payload_col).mapInPandas(run, SAMPLES_SCHEMA)
+    return _map_payloads(
+        media,
+        payload_col,
+        SAMPLES_SCHEMA,
+        {"wav": _decoder(_wav_pcm16, stats)},
+        lambda ref: (None, None, None, False),
+        strict,
+    )
 
 
-def _full_raster(ext: str, b: bytes) -> "np.ndarray | None":
-    """Decode a png/bmp payload — or a gif's FIRST frame, full-canvas
-    only — to an (h, w, 3) uint8 raster via the native decoders.  Shared
-    by the resize and perceptual-hash stages; None on any corruption."""
-    if ext == "png":
-        return _png_raster(b)
-    if ext == "bmp":
-        return _bmp_raster(b)
-    if ext == "gif":
-        walked = _gif_frames_raw(b)
-        if walked is None or not walked[2]:
-            return None
-        width, height, frames = walked
-        fw, fh, pal = frames[0][0], frames[0][1], frames[0][2]
-        if (fw, fh) != (width, height):
-            return None  # partial first frame: outside the subset
-        a = _gif_frame_indices(frames[0])
-        if a is None:
-            return None
-        return pal[a]
-    return None
+def _gif_first_frame(b: bytes) -> "np.ndarray | None":
+    """A gif's FIRST frame, full-canvas only, as an (h, w, 3) uint8
+    raster; None on any corruption or a partial first frame."""
+    walked = _gif_pixel_frames(b)
+    if walked is None or not walked[2]:
+        return None
+    width, height, frames = walked
+    fw, fh, pal = frames[0][0], frames[0][1], frames[0][2]
+    if (fw, fh) != (width, height):
+        return None  # partial first frame: outside the subset
+    a = _gif_frame_indices(frames[0])
+    if a is None:
+        return None
+    return pal[a]
+
+
+# the full rasters the resize and perceptual-hash stages read
+_RASTERS = {"png": _png_raster, "bmp": _bmp_raster, "gif": _gif_first_frame}
+
+
+def _thumbnail(px: "np.ndarray", th: int, tw: int) -> "np.ndarray":
+    """Nearest-neighbor resample of an (h, w, 3) raster to a (th, tw, 3)
+    int64 thumbnail: pixel (ty, tx) = source pixel ((ty·h) div th,
+    (tx·w) div tw) — downsample or upsample alike."""
+    h, w = px.shape[0], px.shape[1]
+    ys = (np.arange(th, dtype=np.int64) * h) // th
+    xs = (np.arange(tw, dtype=np.int64) * w) // tw
+    return px[np.ix_(ys, xs)].astype(np.int64)
 
 
 def thumbnail_row_stats(
@@ -728,46 +704,25 @@ def thumbnail_row_stats(
     recompute every value from the corpus color rule + header dims and a
     wrong row mapping, column mapping, BMP orientation flip, or palette
     lookup fails the hash.  Corrupt / unsupported payloads → a single
-    (ty=-1, -1 sums, ok=false) row unless ``strict=True`` (declared
-    codec stub for formats needing external libraries)."""
+    ok=false row with NULL ty and sums unless ``strict=True`` (declared
+    codec stub for formats needing external libraries); the query layer
+    coalesces those NULLs to -1."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        bad = (None, None, None, None, False)
-        for pdf in batches:
-            rows = []
-            for ref, payload in zip(pdf["media_ref"], pdf[payload_col]):
-                ext = ref.rsplit(".", 1)[-1].lower() if "." in ref else ""
-                if ext not in ("png", "bmp", "gif"):
-                    if strict:
-                        raise NotImplementedError(
-                            f"raster decode for '.{ext}' requires a codec "
-                            "library (not in this image); png/bmp/gif "
-                            "decode natively"
-                        )
-                    rows.append((ref, *bad))
-                    continue
-                px = _full_raster(
-                    ext, bytes(payload) if payload is not None else b""
-                )
-                if px is None:
-                    rows.append((ref, *bad))
-                    continue
-                h, w = px.shape[0], px.shape[1]
-                ys = (np.arange(th, dtype=np.int64) * h) // th
-                xs = (np.arange(tw, dtype=np.int64) * w) // tw
-                thumb = px[np.ix_(ys, xs)].astype(np.int64)
-                rs = thumb.sum(axis=1)  # (th, 3) row channel sums
-                rows.extend(
-                    (ref, ty, int(rs[ty, 0]), int(rs[ty, 1]), int(rs[ty, 2]),
-                     True)
-                    for ty in range(th)
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=["media_ref", "ty", "sum_r", "sum_g", "sum_b", "ok"],
-            )
+    def rows(px: np.ndarray) -> list[tuple]:
+        rs = _thumbnail(px, th, tw).sum(axis=1)  # (th, 3) row channel sums
+        return [
+            (ty, int(rs[ty, 0]), int(rs[ty, 1]), int(rs[ty, 2]), True)
+            for ty in range(th)
+        ]
 
-    return media.select("media_ref", payload_col).mapInPandas(run, THUMB_SCHEMA)
+    return _map_payloads(
+        media,
+        payload_col,
+        THUMB_SCHEMA,
+        {ext: _decoder(raster, rows) for ext, raster in _RASTERS.items()},
+        lambda ref: (None, None, None, None, False),
+        strict,
+    )
 
 
 AHASH_SCHEMA = (
@@ -795,45 +750,24 @@ def image_ahash(
     positive in every SQL engine so XOR/bit_count arithmetic is portable.
     Corrupt / unsupported payloads → (ok=false, -1 bands) sentinels
     unless ``strict=True``."""
+    weights = np.array([299, 587, 114], dtype=np.int64)
+    shifts = 15 - (np.arange(64) % 16)
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        bad = (-1, -1, -1, -1, False)
-        weights = np.array([299, 587, 114], dtype=np.int64)
-        for pdf in batches:
-            rows = []
-            for ref, payload in zip(pdf["media_ref"], pdf[payload_col]):
-                ext = ref.rsplit(".", 1)[-1].lower() if "." in ref else ""
-                if ext not in ("png", "bmp", "gif"):
-                    if strict:
-                        raise NotImplementedError(
-                            f"raster decode for '.{ext}' requires a codec "
-                            "library (not in this image); png/bmp/gif "
-                            "decode natively"
-                        )
-                    rows.append((ref, *bad))
-                    continue
-                px = _full_raster(
-                    ext, bytes(payload) if payload is not None else b""
-                )
-                if px is None:
-                    rows.append((ref, *bad))
-                    continue
-                h, w = px.shape[0], px.shape[1]
-                ys = (np.arange(8, dtype=np.int64) * h) // 8
-                xs = (np.arange(8, dtype=np.int64) * w) // 8
-                thumb = px[np.ix_(ys, xs)].astype(np.int64)
-                luma = (thumb @ weights) // 1000  # (8, 8)
-                bits = (64 * luma > luma.sum()).astype(np.int64).ravel()
-                shifts = 15 - (np.arange(64) % 16)
-                vals = bits << shifts
-                bands = [int(vals[16 * i : 16 * (i + 1)].sum())
-                         for i in range(4)]
-                rows.append((ref, *bands, True))
-            yield pd.DataFrame(
-                rows, columns=["media_ref", "b0", "b1", "b2", "b3", "ok"]
-            )
+    def bands(px: np.ndarray) -> list[tuple]:
+        luma = (_thumbnail(px, 8, 8) @ weights) // 1000  # (8, 8)
+        bits = (64 * luma > luma.sum()).astype(np.int64).ravel()
+        vals = bits << shifts
+        b0, b1, b2, b3 = (int(vals[16 * i : 16 * (i + 1)].sum()) for i in range(4))
+        return [(b0, b1, b2, b3, True)]
 
-    return media.select("media_ref", payload_col).mapInPandas(run, AHASH_SCHEMA)
+    return _map_payloads(
+        media,
+        payload_col,
+        AHASH_SCHEMA,
+        {ext: _decoder(raster, bands) for ext, raster in _RASTERS.items()},
+        lambda ref: (-1, -1, -1, -1, False),
+        strict,
+    )
 
 
 def audio_frame_features(
@@ -854,50 +788,28 @@ def audio_frame_features(
     a frame boundary belong to neither frame — the split a wrong
     boundary shifts, which the oracle hash then catches).  All values are
     exact integers recomputable from the corpus sample rule.  Corrupt /
-    non-wav payloads → a single (frame_idx=-1, -1s, ok=false) row unless
-    ``strict=True``."""
+    non-wav payloads → a single ok=false row with NULL frame_idx and
+    features unless ``strict=True``; the query layer coalesces those
+    NULLs to -1."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        bad = (None, None, None, None, None, False)
-        for pdf in batches:
-            rows = []
-            for ref, payload in zip(pdf["media_ref"], pdf[payload_col]):
-                ext = ref.rsplit(".", 1)[-1].lower() if "." in ref else ""
-                if ext != "wav":
-                    if strict:
-                        raise NotImplementedError(
-                            f"sample decode for '.{ext}' requires a codec "
-                            "library (not in this image); wav decodes "
-                            "natively"
-                        )
-                    rows.append((ref, *bad))
-                    continue
-                b = bytes(payload) if payload is not None else b""
-                if _parse_wav(b) is None or len(b) < 44:
-                    rows.append((ref, *bad))
-                    continue
-                bits = struct.unpack("<H", b[34:36])[0]
-                data_size = struct.unpack("<I", b[40:44])[0]
-                body = b[44 : 44 + data_size]
-                if bits != 16 or len(body) != data_size or data_size % 2:
-                    rows.append((ref, *bad))
-                    continue
-                s = np.frombuffer(body, dtype="<i2").astype(np.int64)
-                for f in range(0, (len(s) + frame - 1) // frame):
-                    seg = s[f * frame : (f + 1) * frame]
-                    zc = int(np.count_nonzero(seg[:-1] * seg[1:] < 0))
-                    rows.append(
-                        (ref, f, len(seg), int(seg.sum()),
-                         int(np.abs(seg).sum()), zc, True)
-                    )
-            yield pd.DataFrame(
-                rows,
-                columns=["media_ref", "frame_idx", "n", "sum_amp",
-                         "sum_abs", "n_zc", "ok"],
+    def frames(pcm: "tuple[int, np.ndarray]") -> list[tuple]:
+        s = pcm[1]
+        out = []
+        for f in range(0, (len(s) + frame - 1) // frame):
+            seg = s[f * frame : (f + 1) * frame]
+            zc = int(np.count_nonzero(seg[:-1] * seg[1:] < 0))
+            out.append(
+                (f, len(seg), int(seg.sum()), int(np.abs(seg).sum()), zc, True)
             )
+        return out
 
-    return media.select("media_ref", payload_col).mapInPandas(
-        run, AUDIO_FRAMES_SCHEMA
+    return _map_payloads(
+        media,
+        payload_col,
+        AUDIO_FRAMES_SCHEMA,
+        {"wav": _decoder(_wav_pcm16, frames)},
+        lambda ref: (None, None, None, None, None, False),
+        strict,
     )
 
 
@@ -920,52 +832,27 @@ def gif_frame_samples(
     all-frames decoder's contract; non-gif extensions → ok=false row
     unless ``strict=True``."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        bad = (None, None, None, None, None, False)
-        for pdf in batches:
-            rows = []
-            for ref, payload in zip(pdf["media_ref"], pdf[payload_col]):
-                ext = ref.rsplit(".", 1)[-1].lower() if "." in ref else ""
-                if ext != "gif":
-                    if strict:
-                        raise NotImplementedError(
-                            f"frame decode for '.{ext}' requires a codec "
-                            "library (not in this image); gif decodes "
-                            "natively"
-                        )
-                    rows.append((ref, *bad))
-                    continue
-                walked = _gif_frames_raw(
-                    bytes(payload) if payload is not None else b""
-                )
-                if walked is None:
-                    rows.append((ref, *bad))
-                    continue
-                _, _, frames = walked
-                out = []
-                for f in range(0, len(frames), stride):
-                    a = _gif_frame_indices(frames[f])
-                    if a is None:
-                        out = None
-                        break
-                    pal = frames[f][2]
-                    ssum = pal[a.ravel()].astype(np.int64).sum(axis=0)
-                    out.append(
-                        (ref, f, a.size, int(ssum[0]), int(ssum[1]),
-                         int(ssum[2]), True)
-                    )
-                if out is None:
-                    rows.append((ref, *bad))
-                else:
-                    rows.extend(out)
-            yield pd.DataFrame(
-                rows,
-                columns=["media_ref", "f", "n_px", "sum_r", "sum_g",
-                         "sum_b", "ok"],
+    def sample(walked: tuple) -> list[tuple] | None:
+        _, _, frames = walked
+        out = []
+        for f in range(0, len(frames), stride):
+            a = _gif_frame_indices(frames[f])
+            if a is None:
+                return None
+            pal = frames[f][2]
+            ssum = pal[a.ravel()].astype(np.int64).sum(axis=0)
+            out.append(
+                (f, a.size, int(ssum[0]), int(ssum[1]), int(ssum[2]), True)
             )
+        return out
 
-    return media.select("media_ref", payload_col).mapInPandas(
-        run, GIF_SAMPLE_SCHEMA
+    return _map_payloads(
+        media,
+        payload_col,
+        GIF_SAMPLE_SCHEMA,
+        {"gif": _decoder(_gif_pixel_frames, sample)},
+        lambda ref: (None, None, None, None, None, False),
+        strict,
     )
 
 
@@ -1024,9 +911,11 @@ def modality_stats(documents: DataFrame) -> DataFrame:
 
     media = "filter(spans, s -> s.media_ref IS NOT NULL)"
 
-    def n_ext(exts: tuple[str, ...]) -> str:
+    def n_type(media_type: str) -> str:
         conds = " OR ".join(
-            f"endswith(lower(s.media_ref), '.{e}')" for e in exts
+            f"endswith(lower(s.media_ref), '.{e}')"
+            for e, t in _MEDIA_TYPES.items()
+            if t == media_type
         )
         return f"size(filter(spans, s -> s.media_ref IS NOT NULL AND ({conds})))"
 
@@ -1034,9 +923,9 @@ def modality_stats(documents: DataFrame) -> DataFrame:
         "doc_id",
         F.expr("size(spans)").cast("long").alias("n_spans"),
         F.expr(f"size({media})").cast("long").alias("n_media"),
-        F.expr(n_ext(("png", "jpg", "jpeg", "gif"))).cast("long").alias("n_image"),
-        F.expr(n_ext(("mp3", "wav", "flac"))).cast("long").alias("n_audio"),
-        F.expr(n_ext(("mp4", "mkv", "webm"))).cast("long").alias("n_video"),
+        F.expr(n_type("image")).cast("long").alias("n_image"),
+        F.expr(n_type("audio")).cast("long").alias("n_audio"),
+        F.expr(n_type("video")).cast("long").alias("n_video"),
         F.expr(
             "aggregate(spans, 0L, (acc, s) -> acc + octet_length(coalesce(s.text, '')))"
         ).alias("text_bytes"),

@@ -200,7 +200,7 @@ def bmp_bytes(
     4-byte boundary) — the two-tone color rule mirrors ``png_bytes`` (top
     ``height//2`` rows = c_top, rest = c_bottom) so exact channel sums
     are a pure function of (ref number, header dims).  Decodable by any
-    BMP reader and by ``multimodal._decode_bmp_pixels`` with zero
+    BMP reader and by ``multimodal._bmp_raster`` with zero
     decompression."""
     import struct
 

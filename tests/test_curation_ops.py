@@ -164,6 +164,20 @@ def test_modality_stats_micro(spark):
     assert r.media_frac == 0.6
 
 
+def test_modality_stats_counts_bmp_as_image(spark):
+    """n_image reads the same extension table as the payload decoders,
+    which decode .bmp natively."""
+    from tests.util import spans_df
+
+    spans = [
+        {"kind": "embed", "text": "", "media_ref": ref, "offset": i}
+        for i, ref in enumerate(["scan.bmp", "b.gif", "c.wav"])
+    ]
+    docs = spans_df(spark, [{"doc_id": "d", "spans": spans}])
+    r = modality_stats(docs).collect()[0]
+    assert (r.n_media, r.n_image, r.n_audio, r.n_video) == (3, 2, 1, 0)
+
+
 def test_repetition_no_python_in_plan(spark):
     plan = repetition_stats(_docs(spark, ["x"]))._jdf.queryExecution().executedPlan().toString()
     assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan

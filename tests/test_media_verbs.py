@@ -4,6 +4,8 @@ PCM energy / zero-crossings), and frame sampling (decode only the kept
 GIF frames).  Expectations are re-derived INDEPENDENTLY in the test from
 the generation rules — never by calling the decoders under test."""
 
+import struct
+
 import numpy as np
 import pytest
 
@@ -11,7 +13,12 @@ from obsidian_parser_spark.operators.multimodal import (
     _gif_frame_indices,
     _gif_frames_raw,
     audio_frame_features,
+    audio_sample_stats,
+    decode_media_payloads,
     gif_frame_samples,
+    gif_frame_stats,
+    image_ahash,
+    image_channel_stats,
     thumbnail_row_stats,
 )
 from obsidian_parser_spark.sources.corpus import (
@@ -205,3 +212,70 @@ def test_gif_frame_sampling_corrupt_sampled_frame_fails_closed(spark):
         _media_df(spark, [("x.gif", payload)]), stride=3
     ).collect()
     assert len(rows) == 1 and not rows[0].ok and rows[0].f is None
+
+
+# operator, a natively decoded extension, its exact error-row tail, and
+# whether it takes ``strict``
+PAYLOAD_OPERATORS = [
+    (decode_media_payloads, "png", ("image", None, None, None, False), True),
+    (gif_frame_stats, "gif", (None, None, None, False), False),
+    (image_channel_stats, "png", (None,) * 6 + (False,), True),
+    (audio_sample_stats, "wav", (None, None, None, False), True),
+    (thumbnail_row_stats, "png", (None,) * 4 + (False,), True),
+    (image_ahash, "png", (-1, -1, -1, -1, False), True),
+    (audio_frame_features, "wav", (None,) * 5 + (False,), True),
+    (gif_frame_samples, "gif", (None,) * 5 + (False,), True),
+]
+
+
+@pytest.mark.parametrize(
+    "op, ext, bad, has_strict",
+    PAYLOAD_OPERATORS,
+    ids=[row[0].__name__ for row in PAYLOAD_OPERATORS],
+)
+def test_payload_operator_error_channel_and_strict(spark, op, ext, bad, has_strict):
+    """Every payload operator: an unsupported .jpg and a NULL payload of a
+    supported extension each give exactly one error row with the
+    operator's own tail; ``strict=True`` raises the codec stub for the
+    .jpg."""
+    df = spark.createDataFrame(
+        [("photo.jpg", bytearray(b"\xff\xd8\xff\xe0")), (f"none.{ext}", None)],
+        MEDIA_SCHEMA,
+    )
+    got = sorted(tuple(r) for r in op(df).collect())
+    assert got == [(f"none.{ext}", *bad), ("photo.jpg", *bad)]
+    if has_strict:
+        with pytest.raises(Exception, match="codec library"):
+            op(df, strict=True).collect()
+
+
+def _palette_less_gif(w, h):
+    """A GIF with no global and no local color table: the corpus GIF's
+    first frame (its LZW data intact) behind a header with the GCT flag
+    cleared."""
+    g = gif_bytes(w, h, n_frames=1)
+    frame = g[13 + 12 : -1]  # screen descriptor + 4-entry GCT, then frame
+    assert frame[0] == 0x2C and frame[9] == 0  # no local color table
+    return b"GIF89a" + struct.pack("<HH", w, h) + b"\x00\x00\x00" + frame + b"\x3b"
+
+
+def test_gif_walk_counts_palette_less_frame_pixels_fail_closed(spark):
+    """The one block walker counts a frame without a color table; the
+    pixel paths have no colors for it and fail closed."""
+    df = _media_df(spark, [("p.gif", _palette_less_gif(4, 3))])
+    (r,) = gif_frame_stats(df).collect()
+    assert (r.width, r.height, r.n_frames, r.ok) == (4, 3, 1, True)
+    (px,) = image_channel_stats(df).collect()
+    assert not px.ok and px.n_px is None
+    (s,) = gif_frame_samples(df).collect()
+    assert not s.ok and s.f is None
+
+
+def test_gif_frame_stats_header_only_gif_is_error_row(spark):
+    """A 10-byte GIF (signature + width + height, nothing else) passes
+    the header parse but has no screen-descriptor flags byte: an ok=false
+    row, not a task failure."""
+    df = _media_df(spark, [("h.gif", b"GIF89a" + struct.pack("<HH", 3, 4))])
+    assert [tuple(r) for r in gif_frame_stats(df).collect()] == [
+        ("h.gif", None, None, None, False)
+    ]
