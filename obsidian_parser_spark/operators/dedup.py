@@ -33,7 +33,7 @@ from pyspark.sql import functions as F
 
 from ..checkpointing import cut_lineage
 from .overlap import attach_sizes, capped_overlap, jaccard_at_least
-from .textstats import _TOKENS
+from .textstats import _TOKENS, _word_grams
 
 # ---------------------------------------------------------------- exact
 
@@ -58,62 +58,28 @@ def shingles(
     documents: DataFrame, n: int = 3, id_col: str = "doc_id", text_col: str = "text"
 ) -> DataFrame:
     """(doc_id, shingle) pairs — word n-grams joined with ' ', whole text as
-    a single shingle when shorter than n tokens.
-
-    Shingle construction uses ``pyspark.ml.feature.NGram`` — a compiled JVM
-    closure.  The obvious alternative, a ``transform(sequence(...), i ->
-    array_join(slice(...)))`` higher-order expression, is INTERPRETED per
-    element and measured 5× slower at 92M shingles (30.5 s vs 6.1 s on
-    local[32], sf0.1); inlining the tokenizer into the lambda additionally
-    re-evaluates it per shingle (O(tokens²) per doc — 431 s).  Same output
-    strings either way, so the DuckDB oracles are unaffected."""
-    from pyspark.ml.feature import NGram
-
+    a single shingle when shorter than n tokens (``_word_grams``)."""
     toks = documents.select(
         F.col(id_col).alias("doc_id"),
         F.expr(_TOKENS.format(t=text_col)).alias("_t"),
     )
-    ng = NGram(n=n, inputCol="_t", outputCol="_ng")
-    return ng.transform(toks).select(
-        "doc_id",
-        F.explode(
-            F.expr(
-                f"CASE WHEN size(_t) >= {n} THEN _ng "
-                f"ELSE array(array_join(_t, ' ')) END"
-            )
-        ).alias("shingle"),
-    )
+    ng, grams = _word_grams(toks, n, whole_text=True)
+    return ng.select("doc_id", F.explode(grams).alias("shingle"))
 
 
 def distinct_shingles(
     documents: DataFrame, n: int = 3, id_col: str = "doc_id", text_col: str = "text"
 ) -> DataFrame:
-    """(doc_id, shingle) distinct pairs.
-
-    The dedup is PER DOCUMENT by construction — (doc_id, shingle) can
-    only repeat within one doc's own shingle list — so ``array_distinct``
-    on the n-gram array BEFORE the explode yields the identical row set
-    as a global ``.distinct()`` with NO exchange at all (guide §2.4: the
-    old plan shuffled the full ~10-words-per-shingle string stream once
-    just to dedup rows that were never spread across partitions).  Every
-    consumer (dupspans, the incremental index, ngram/containment/
-    contamination/verified) drops one corpus-wide shuffle."""
-    from pyspark.ml.feature import NGram
-
+    """(doc_id, shingle) distinct pairs, deduplicated per document with no
+    exchange.  Every consumer (dupspans, the incremental index,
+    ngram/containment/contamination/verified) reads it without a
+    corpus-wide shuffle of the shingle strings."""
     toks = documents.select(
         F.col(id_col).alias("doc_id"),
         F.expr(_TOKENS.format(t=text_col)).alias("_t"),
     )
-    ng = NGram(n=n, inputCol="_t", outputCol="_ng")
-    return ng.transform(toks).select(
-        "doc_id",
-        F.explode(
-            F.expr(
-                f"array_distinct(CASE WHEN size(_t) >= {n} THEN _ng "
-                f"ELSE array(array_join(_t, ' ')) END)"
-            )
-        ).alias("shingle"),
-    )
+    ng, grams = _word_grams(toks, n, whole_text=True, distinct=True)
+    return ng.select("doc_id", F.explode(grams).alias("shingle"))
 
 
 def ngram_jaccard_pairs(

@@ -82,11 +82,11 @@ _PNG_SIG = b"\x89PNG\r\n\x1a\n"
 Decoder = Callable[[bytes], "list[tuple] | None"]
 
 
-def _ext(ref: str) -> str:
-    return ref.rsplit(".", 1)[-1].lower() if "." in ref else ""
+def _ext(ref: str | None) -> str:
+    return ref.rsplit(".", 1)[-1].lower() if ref and "." in ref else ""
 
 
-def _media_type(ref: str) -> str:
+def _media_type(ref: str | None) -> str:
     return _MEDIA_TYPES.get(_ext(ref), "unknown")
 
 
@@ -118,7 +118,8 @@ def _map_payloads(
     decoder fails closed.  The error channel — a decoder returning None,
     or an extension with no decoder — appends the single row
     ``(media_ref, *bad(media_ref))``; under ``strict`` an extension with
-    no decoder raises the declared codec stub instead."""
+    no decoder raises the declared codec stub instead, except for a NULL
+    ref, which has no codec to name and always takes the error channel."""
     columns = [field.split()[0] for field in schema.split(",")]
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -127,7 +128,7 @@ def _map_payloads(
             for ref, payload in zip(pdf["media_ref"], pdf[payload_col]):
                 ext = _ext(ref)
                 dec = decoders.get(ext)
-                if dec is None and strict:
+                if dec is None and strict and ref is not None:
                     raise NotImplementedError(
                         f"real media decode for '.{ext}' requires a codec "
                         "library (PIL/ffmpeg), which the engine does not "
@@ -281,7 +282,9 @@ def gif_frame_stats(media: DataFrame, payload_col: str = "payload") -> DataFrame
     )
 
 
-def _fake_decode(ref: str) -> tuple[int, int, int]:
+def _fake_decode(ref: str | None) -> tuple[int | None, int | None, int | None]:
+    if ref is None:
+        return None, None, None
     h = hashlib.md5(ref.encode()).digest()
     return 16 + h[0] * 8, 16 + h[1] * 8, int.from_bytes(h[2:4], "big")
 
@@ -298,7 +301,8 @@ def decode_media(
     decode (``decode_media_payloads`` — png/gif/bmp/wav parsed natively,
     other extensions ok=false rows, or the declared codec stub under
     ``strict=True``); ``fake=False`` without payload bytes raises: there
-    is nothing to decode from a bare ref."""
+    is nothing to decode from a bare ref.  Under ``fake=True`` a NULL ref
+    gives an ``ok=false`` row with NULL width and height."""
     if not fake and payload_col is not None:
         return decode_media_payloads(media, payload_col, strict=strict)
 
@@ -858,12 +862,12 @@ def gif_frame_samples(
 
 def extract_features(media: DataFrame, dim: int = 16) -> DataFrame:
     """Deterministic fake feature extractor — the Arrow batch shape of a
-    real embedding model stage."""
+    real embedding model stage.  A NULL ref gets NULL features."""
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             feats = [
-                (np.frombuffer(
+                None if ref is None else (np.frombuffer(
                     (hashlib.md5(ref.encode()).digest() * (dim // 16 + 1))[:dim],
                     dtype=np.uint8,
                 ).astype(np.float32) / 255.0).tolist()
@@ -879,7 +883,7 @@ def extract_features(media: DataFrame, dim: int = 16) -> DataFrame:
 
 def sample_frames(media: DataFrame, every_ms: int = 1000) -> DataFrame:
     """Frame-sampling plan for video refs (deterministic offsets from the
-    fake duration)."""
+    fake duration); other and NULL refs give no row."""
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:

@@ -16,7 +16,7 @@ and are exactly reproducible by the DuckDB oracle):
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 # marker stopwords per language (tiny fixed dictionaries; heuristic)
@@ -28,6 +28,61 @@ LANG_MARKERS: dict[str, list[str]] = {
 }
 
 _TOKENS = "filter(split(lower({t}), '\\\\s+'), x -> x != '')"
+
+
+def _word_grams(
+    frame: DataFrame,
+    n: int,
+    tokens: str = "_t",
+    whole_text: bool = False,
+    distinct: bool = False,
+) -> tuple[DataFrame, Column]:
+    """The one place the engine forms word grams: the adjacent ``n``-grams
+    of the token-array column ``tokens``, each its ``n`` tokens joined
+    with ``' '``.  Returns ``frame`` with the grams staged, and the
+    gram-array Column over it.
+
+    * ``whole_text`` — an array shorter than ``n`` gives one gram, its
+      whole ``' '``-joined text ('' when empty), instead of none;
+    * ``distinct`` — per-row ``array_distinct``: a (row, gram) pair can
+      only repeat inside one row's own array, so exploding the distinct
+      array gives the rows of a global ``.distinct()`` with no exchange.
+
+    Callers explode or transform the Column in place.  Exploding it after
+    selecting it as a plain column would let the planner infer
+    ``size(grams) > 0`` and push it into a Filter beneath, which runs the
+    whole gram pass twice.
+
+    Compiled ``pyspark.ml.feature.NGram``: the interpreted
+    ``transform(sequence(...), i -> array_join(slice(...)))`` form runs
+    per element and measured 5× slower at 92M shingles (30.5 s vs 6.1 s
+    on local[32], sf0.1).
+
+    Splitting a gram on a literal ``' '`` (``_gram_words``) gives its
+    tokens back exactly: ``_TOKENS`` splits on Java ``\\s``, which holds
+    U+0020, so no token contains one (BPE symbols are ``[a-z0-9]+``).
+    Callers split after aggregating on the gram, on vocabulary-sized rows.
+
+    NULL rule: a NULL token array (NULL text) gives a NULL gram array,
+    which explodes to no rows.  ``NGram`` throws on a NULL input, so its
+    input is coalesced to an empty array and its output re-NULLed."""
+    from pyspark.ml.feature import NGram
+
+    t = F.col(tokens)
+    staged = frame.withColumn("_ngi", F.coalesce(t, F.array().cast("array<string>")))
+    grams = F.col("_ng")
+    if whole_text:
+        grams = F.when(F.size(t) >= n, grams).otherwise(F.array(F.array_join(t, " ")))
+    if distinct:
+        grams = F.array_distinct(grams)
+    ng = NGram(n=n, inputCol="_ngi", outputCol="_ng").transform(staged)
+    return ng, F.when(t.isNotNull(), grams)
+
+
+def _gram_words(*names: str) -> list:
+    """Columns ``names``: the tokens of gram column ``g`` by position."""
+    words = F.split("g", " ")
+    return [words[i].alias(name) for i, name in enumerate(names)]
 
 
 def _marker_hits(lang: str, tokens: str) -> str:
@@ -165,25 +220,6 @@ GOPHER_DUP_LINE_CHAR_FRAC = 0.20
 GOPHER_TOP_BIGRAM_FRAC = 0.18
 
 
-def _word_bigrams(documents: DataFrame, text_col: str, id_col: str) -> DataFrame:
-    """(doc_id, bigram) — lowercased word 2-grams, NO row for docs with
-    fewer than 2 tokens (unlike dedup.shingles, which falls back to the
-    whole text as one shingle — a deliberate divergence: a 1-token doc has
-    zero bigrams, not one).  NGram (compiled JVM closure) over the token
-    array; the interpreted transform(sequence(...)) alternative measured 5×
-    slower at sf0.1 (see dedup.shingles)."""
-    from pyspark.ml.feature import NGram
-
-    toks = documents.select(
-        F.col(id_col).alias("doc_id"),
-        F.expr(_TOKENS.format(t=text_col)).alias("_t"),
-    )
-    ng = NGram(n=2, inputCol="_t", outputCol="_ng")
-    return ng.transform(toks).select(
-        "doc_id", F.explode("_ng").alias("bigram")
-    )
-
-
 def repetition_stats(
     documents: DataFrame, text_col: str = "text", id_col: str = "doc_id"
 ) -> DataFrame:
@@ -219,9 +255,17 @@ def repetition_stats(
         ).alias("dup_line_bytes"),
     )
 
-    bc = _word_bigrams(documents, text_col, id_col).groupBy(
-        "doc_id", "bigram"
-    ).agg(F.count("*").alias("c"))
+    # no whole-text fallback: a 1-token doc has zero bigrams, not one
+    toks = documents.select(
+        F.col(id_col).alias("doc_id"),
+        F.expr(_TOKENS.format(t=text_col)).alias("_t"),
+    )
+    ng, bigrams = _word_grams(toks, 2)
+    bc = (
+        ng.select("doc_id", F.explode(bigrams).alias("bigram"))
+        .groupBy("doc_id", "bigram")
+        .agg(F.count("*").alias("c"))
+    )
     bg_agg = bc.groupBy("doc_id").agg(
         F.sum("c").alias("n_bigrams"), F.max("c").alias("top_bigram_c")
     )
@@ -492,8 +536,7 @@ def collocation_stats(
     the long bigram tail BEFORE the two unigram-count attach joins
     (vocabulary-keyed shuffle joins — a unigram table is vocabulary-
     sized, never broadcast-assumed); the corpus total is a one-row
-    broadcast cross join.  Tokens are whitespace-split, so w1/w2 can
-    never contain the pair separator.
+    broadcast cross join.
     """
     from ..checkpointing import cut_lineage
 
@@ -502,19 +545,13 @@ def collocation_stats(
     toks = cut_lineage(
         documents.select(F.expr(_TOKENS.format(t=text_col)).alias("_t"))
     )
-    npairs = "greatest(size(_t) - 1, 0)"
-    pairs = toks.select(
-        F.explode(
-            F.expr(
-                f"zip_with(slice(_t, 1, {npairs}), slice(_t, 2, {npairs}),"
-                " (a, b) -> struct(a AS w1, b AS w2))"
-            )
-        ).alias("_p")
-    ).select("_p.w1", "_p.w2")
+    ng, bigrams = _word_grams(toks, 2)
     pair_counts = (
-        pairs.groupBy("w1", "w2")
+        ng.select(F.explode(bigrams).alias("g"))
+        .groupBy("g")
         .agg(F.count(F.lit(1)).alias("n_pair"))
         .filter(F.col("n_pair") >= min_pair)
+        .select(*_gram_words("w1", "w2"), "n_pair")
     )
     uni = (
         toks.select(F.explode("_t").alias("w"))
@@ -552,27 +589,21 @@ def winnow_fingerprints(
     shorter than ``k`` tokens degrade to one whole-text gram (the
     shingles fallback rule).
 
-    Scale shape: everything up to the explode is a per-row JVM
-    higher-order expression (no shuffle, no UDF); the output is already
-    distinct per doc so the explode carries ~2·tokens/(w+1) rows per
-    document.  The HOF transform is interpreted per element — at vault
-    scale swap the gram builder for pyspark.ml NGram exactly as
-    dedup.shingles does (measured 5× there).
+    Scale shape: everything up to the explode is per-row JVM work (no
+    shuffle, no UDF); the output is already distinct per doc so the
+    explode carries ~2·tokens/(w+1) rows per document.
     """
-    grams = (
-        f"transform(sequence(1, greatest(size(_t) - {k} + 1, 1)),"
-        f" i -> md5(array_join(slice(_t, i, {k}), ' ')))"
-    )
     mins = (
         f"array_distinct(transform(sequence(1, greatest(size(_h) - {w} + 1, 1)),"
         f" j -> array_min(slice(_h, j, {w}))))"
     )
+    toks = documents.select(
+        F.col(id_col).alias("doc_id"),
+        F.expr(_TOKENS.format(t=text_col)).alias("_t"),
+    )
+    ng, grams = _word_grams(toks, k, whole_text=True)
     return (
-        documents.select(
-            F.col(id_col).alias("doc_id"),
-            F.expr(_TOKENS.format(t=text_col)).alias("_t"),
-        )
-        .select("doc_id", F.expr(grams).alias("_h"))
+        ng.select("doc_id", F.transform(grams, F.md5).alias("_h"))
         .select("doc_id", F.explode(F.expr(mins)).alias("fp"))
     )
 
@@ -613,16 +644,12 @@ def textrank_keywords(
         .filter(F.col("n") >= min_count)
         .select("w")
     )
-    bigrams = (
-        "CASE WHEN size(_t) < 2 THEN array() "
-        "ELSE transform(sequence(1, size(_t) - 1),"
-        " i -> struct(element_at(_t, i) AS w1, element_at(_t, i + 1) AS w2)) END"
-    )
+    ng, bigrams = _word_grams(toks, 2)
     pairs = (
-        toks.select(F.explode(F.expr(bigrams)).alias("p"))
-        .select("p.w1", "p.w2")
-        .groupBy("w1", "w2")
+        ng.select(F.explode(bigrams).alias("g"))
+        .groupBy("g")
         .agg(F.count("*").alias("n"))
+        .select(*_gram_words("w1", "w2"), "n")
         .join(vocab.withColumnRenamed("w", "w1"), "w1")
         .join(vocab.withColumnRenamed("w", "w2"), "w2")
     )
@@ -668,18 +695,17 @@ def ngram_lm_counts(
     from ..checkpointing import cut_lineage
 
     toks = documents.select(F.expr(_TOKENS.format(t=text_col)).alias("_t"))
-    tris = (
-        "CASE WHEN size(_t) < 3 THEN array() "
-        "ELSE transform(sequence(1, size(_t) - 2),"
-        " i -> struct(element_at(_t, i) AS w1, element_at(_t, i + 1) AS w2,"
-        " element_at(_t, i + 2) AS w3)) END"
-    )
-    t = toks.select(F.explode(F.expr(tris)).alias("g")).select("g.w1", "g.w2", "g.w3")
     # ONE corpus pass: the context count over all trigram positions is the
     # per-(w1, w2) SUM of the aggregated trigram counts, so ctx derives
     # from the (vocabulary-sized, materialized) trigram table instead of a
     # second explode + groupBy over the corpus — identical ctx_n
-    counts3 = cut_lineage(t.groupBy("w1", "w2", "w3").agg(F.count("*").alias("n")))
+    ng, trigrams = _word_grams(toks, 3)
+    counts3 = cut_lineage(
+        ng.select(F.explode(trigrams).alias("g"))
+        .groupBy("g")
+        .agg(F.count("*").alias("n"))
+        .select(*_gram_words("w1", "w2", "w3"), "n")
+    )
     tri = counts3.filter(F.col("n") >= min_count)
     ctx = counts3.groupBy("w1", "w2").agg(F.sum("n").alias("ctx_n"))
     return tri.join(ctx, ["w1", "w2"]).select("w1", "w2", "w3", "n", "ctx_n")
@@ -699,13 +725,6 @@ def _bpe_fold_expr(l: str, r: str) -> str:
     )
 
 
-_BPE_PAIRS = (
-    "CASE WHEN size(syms) < 2 THEN array() "
-    "ELSE transform(sequence(1, size(syms) - 1),"
-    " i -> struct(element_at(syms, i) AS l, element_at(syms, i + 1) AS r)) END"
-)
-
-
 def _bpe_train(documents, n_merges, id_col, text_col):
     """Shared BPE training loop → (merges list, final vocab frame
     (w, syms, n)).  See ``bpe_merges`` for the contract."""
@@ -721,10 +740,12 @@ def _bpe_train(documents, n_merges, id_col, text_col):
     )
     merges = []
     for step in range(1, n_merges + 1):
+        ng, pairs = _word_grams(vocab, 2, tokens="syms")
         top = (
-            vocab.select(F.explode(F.expr(_BPE_PAIRS)).alias("p"), "n")
-            .groupBy("p.l", "p.r")
+            ng.select(F.explode(pairs).alias("g"), "n")
+            .groupBy("g")
             .agg(F.sum("n").alias("pn"))
+            .select(*_gram_words("l", "r"), "pn")
             .orderBy(F.col("pn").desc(), "l", "r")
             .limit(1)
             .collect()
@@ -841,23 +862,20 @@ def lm_coverage(
     (which the min_count HAVING keeps Zipf-head-sized); the final
     rollup re-uses the doc_id partitioning.
     """
-    toks = documents.select(
-        F.col(id_col).alias("doc_id"),
-        F.expr(_TOKENS.format(t=text_col)).alias("_t"),
-    )
-    tris = (
-        "CASE WHEN size(_t) < 3 THEN array() "
-        "ELSE transform(sequence(1, size(_t) - 2),"
-        " i -> concat_ws(chr(1), slice(_t, i, 3))) END"
+    ng, trigrams = _word_grams(
+        documents.select(
+            F.col(id_col).alias("doc_id"),
+            F.expr(_TOKENS.format(t=text_col)).alias("_t"),
+        ),
+        3,
     )
     dg = (
-        toks.select("doc_id", F.explode_outer(F.expr(tris)).alias("g"))
+        ng.select("doc_id", F.explode_outer(trigrams).alias("g"))
         .groupBy("doc_id", "g")
         .agg(F.count("*").alias("c"))
     )
     head = (
-        documents.select(F.expr(_TOKENS.format(t=text_col)).alias("_t"))
-        .select(F.explode(F.expr(tris)).alias("g"))
+        ng.select(F.explode(trigrams).alias("g"))
         .groupBy("g")
         .agg(F.count("*").alias("n"))
         .filter(F.col("n") >= min_count)

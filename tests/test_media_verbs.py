@@ -14,11 +14,14 @@ from obsidian_parser_spark.operators.multimodal import (
     _gif_frames_raw,
     audio_frame_features,
     audio_sample_stats,
+    decode_media,
     decode_media_payloads,
+    extract_features,
     gif_frame_samples,
     gif_frame_stats,
     image_ahash,
     image_channel_stats,
+    sample_frames,
     thumbnail_row_stats,
 )
 from obsidian_parser_spark.sources.corpus import (
@@ -234,19 +237,44 @@ PAYLOAD_OPERATORS = [
     ids=[row[0].__name__ for row in PAYLOAD_OPERATORS],
 )
 def test_payload_operator_error_channel_and_strict(spark, op, ext, bad, has_strict):
-    """Every payload operator: an unsupported .jpg and a NULL payload of a
-    supported extension each give exactly one error row with the
-    operator's own tail; ``strict=True`` raises the codec stub for the
-    .jpg."""
+    """Every payload operator: an unsupported .jpg, a NULL payload of a
+    supported extension and a NULL ref each give exactly one error row
+    with the operator's own tail; ``strict=True`` raises the codec stub
+    for the .jpg but still gives the NULL ref its error row."""
     df = spark.createDataFrame(
-        [("photo.jpg", bytearray(b"\xff\xd8\xff\xe0")), (f"none.{ext}", None)],
+        [
+            ("photo.jpg", bytearray(b"\xff\xd8\xff\xe0")),
+            (f"none.{ext}", None),
+            (None, bytearray(png_bytes(2, 2))),
+        ],
         MEDIA_SCHEMA,
     )
-    got = sorted(tuple(r) for r in op(df).collect())
-    assert got == [(f"none.{ext}", *bad), ("photo.jpg", *bad)]
+    # a NULL ref has no extension, so decode_media_payloads types it unknown
+    null_bad = ("unknown", *bad[1:]) if op is decode_media_payloads else bad
+    got = sorted((tuple(r) for r in op(df).collect()), key=lambda r: r[0] or "")
+    assert got == [(None, *null_bad), (f"none.{ext}", *bad), ("photo.jpg", *bad)]
     if has_strict:
         with pytest.raises(Exception, match="codec library"):
             op(df, strict=True).collect()
+        null_ref = df.filter("media_ref IS NULL")
+        assert [tuple(r) for r in op(null_ref, strict=True).collect()] == [
+            (None, *null_bad)
+        ]
+
+
+def test_fake_media_stages_take_null_ref(spark):
+    """The payload-less stages on a NULL media_ref: ``decode_media``
+    (fake) gives an ok=false row with NULL dimensions, ``sample_frames``
+    no row, ``extract_features`` NULL features — never a thrown task."""
+    df = spark.createDataFrame(
+        [("d1", None), ("d2", "clip.mp4")], "doc_id string, media_ref string"
+    )
+    dec = {r.doc_id: tuple(r) for r in decode_media(df).collect()}
+    assert dec["d1"] == ("d1", None, "unknown", None, None, 0, False)
+    assert dec["d2"][2] == "video" and dec["d2"][6]
+    assert [r.doc_id for r in sample_frames(df).collect()] == ["d2"]
+    feats = {r.doc_id: r.features for r in extract_features(df).collect()}
+    assert feats["d1"] is None and len(feats["d2"]) == 16
 
 
 def _palette_less_gif(w, h):
