@@ -24,6 +24,8 @@ shuffle on (alias, kind), partial-aggregated map-side.
 
 from __future__ import annotations
 
+import logging
+
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -92,86 +94,50 @@ def resolve_mentions(
     use_aliases: bool = True,
     broadcast: bool = True,
 ) -> tuple[DataFrame, DataFrame]:
-    """(subj, mention_ord, pred, raw_target) × dict → (edges, dangling).
+    """(…, raw_target, …) mentions × dict → (edges, dangling), the one
+    dictionary probe behind every resolver.
 
-    edges:    (subj, mention_ord, pred, obj)   — one row per occurrence
-    dangling: unresolved mentions (reference drops these silently,
-              graph_builder.rs:160-161; we count them)
+    edges:    every mention column except ``raw_target``, then ``obj`` —
+              one row per resolved occurrence
+    dangling: the unresolved mentions with all their columns (the
+              reference drops these silently, graph_builder.rs:160-161;
+              we count them)
 
-    ``broadcast``: hash-map probe semantics of the reference Index — right
-    for small/medium dictionaries.  For vault-scale dictionaries (10^9+
-    aliases) the broadcast build serializes on the driver and can't fit —
-    pass False for a shuffled hash join (AQE picks the physical strategy;
-    skew-split handles hot aliases).  ``build_graph`` auto-selects.
+    The J2 route is applied on the DICTIONARY side, and that is exact: a
+    mention with target ``t`` can only match a row whose ``alias = t``,
+    so ``route(t) = route(alias)``; keeping only the rows whose ``kind``
+    equals their own alias's route ('/' → full, else short) is the same
+    rule as routing the mention.  Level 1 is then one left join on the
+    target string, and the J5 alias fallback a second one on the same
+    key, with ``coalesce`` keeping the level-1 winner.  Both dictionary
+    sides are unique-keyed (first-wins dedup), so no mention row is
+    duplicated, and when the planner shuffles, both joins share one key
+    and the mention side is exchanged once.
+
+    ``broadcast`` only adds the ``F.broadcast`` hint to both dictionary
+    sides; without it the planner chooses (it still broadcasts below
+    ``spark.sql.autoBroadcastJoinThreshold``).
     """
-    routed = mentions.withColumn(
-        "route",
-        F.when(F.col("raw_target").contains("/"), F.lit(KIND_FULL)).otherwise(
-            F.lit(KIND_SHORT)
-        ),
+    route = F.when(F.col("alias").contains("/"), F.lit(KIND_FULL)).otherwise(
+        F.lit(KIND_SHORT)
     )
-    d = F.broadcast(alias_dict) if broadcast else alias_dict
-    joined = routed.join(
-        d,
-        (routed["raw_target"] == d["alias"]) & (routed["route"] == d["kind"]),
-        "left",
-    )
-
-    if use_aliases and broadcast:
-        # Two CHAINED broadcast left joins + coalesce instead of
-        # join-filter-union: the old shape fed both the hit branch and the
-        # miss branch from the same join subtree, so materializing the
-        # edges evaluated the full mention explode + dictionary probe
-        # TWICE.  Probing the alias fallback for already-resolved rows is
-        # a per-row hash lookup against an (unique-keyed, first-wins)
-        # dict — coalesce keeps the level-1 winner, so the two-level
-        # resolution rule is unchanged and the mention stream is scanned
-        # once.  Only taken on the broadcast path: with shuffle joins the
-        # chain would shuffle the FULL stream twice where the old shape
-        # shuffles full + (small) misses, so the two-phase form stays the
-        # at-scale plan.
-        ad = alias_dict.filter(F.col("kind") == KIND_ALIAS).select(
-            F.col("alias").alias("_al2"), F.col("canonical").alias("_can2")
-        )
-        j2 = joined.join(
-            F.broadcast(ad), joined["raw_target"] == ad["_al2"], "left"
-        )
-        chained = j2.select(
-            "subj",
-            "mention_ord",
-            "pred",
-            "raw_target",
-            F.coalesce(F.col("canonical"), F.col("_can2")).alias("_obj"),
-        )
-        resolved = chained.filter(F.col("_obj").isNotNull()).select(
-            "subj", "mention_ord", "pred", F.col("_obj").alias("obj")
-        )
-        dangling = chained.filter(F.col("_obj").isNull()).select(
-            "subj", "mention_ord", "pred", "raw_target"
-        )
-        return resolved, dangling
-
-    resolved = joined.filter(F.col("canonical").isNotNull()).select(
-        "subj", "mention_ord", "pred", F.col("canonical").alias("obj")
-    )
-    missed = joined.filter(F.col("canonical").isNull()).select(
-        "subj", "mention_ord", "pred", "raw_target"
-    )
+    sides = [alias_dict.filter(F.col("kind") == route)]
     if use_aliases:
-        ad = alias_dict.filter(F.col("kind") == KIND_ALIAS)
-        j2 = missed.join(ad, missed["raw_target"] == ad["alias"], "left")
-        resolved = resolved.unionByName(
-            j2.filter(F.col("canonical").isNotNull()).select(
-                "subj", "mention_ord", "pred", F.col("canonical").alias("obj")
-            )
+        sides.append(alias_dict.filter(F.col("kind") == KIND_ALIAS))
+    cols = mentions.columns
+    joined, hits = mentions, []
+    for i, side in enumerate(sides):
+        d = side.select(
+            F.col("alias").alias("raw_target"), F.col("canonical").alias(f"_c{i}")
         )
-        dangling = j2.filter(F.col("canonical").isNull()).select(
-            "subj", "mention_ord", "pred", "raw_target"
-        )
-    else:
-        dangling = missed
-
-    return resolved, dangling
+        joined = joined.join(F.broadcast(d) if broadcast else d, "raw_target", "left")
+        hits.append(F.col(f"_c{i}"))
+    joined = joined.select(*cols, F.coalesce(*hits).alias("_obj"))
+    edges = joined.filter(F.col("_obj").isNotNull()).select(
+        *[c for c in cols if c != "raw_target"], F.col("_obj").alias("obj")
+    )
+    dangling = joined.filter(F.col("_obj").isNull()).select(*cols)
+    return edges, dangling
 
 
 def identity_clusters(notes: DataFrame) -> DataFrame:
@@ -222,11 +188,7 @@ def identity_clusters(notes: DataFrame) -> DataFrame:
     )
 
 
-def qualified_link_edges(
-    spans: DataFrame,
-    alias_dict: DataFrame,
-    broadcast: bool = True,
-) -> DataFrame:
+def qualified_link_edges(spans: DataFrame, alias_dict: DataFrame) -> DataFrame:
     """→ (subj, pred, obj, qual_kind, qualifier) — resolved link/embed
     triples that carry a sub-note anchor, the heading (``[[note#head]]``)
     or block (``[[note^blk]]``) qualifier the plain edge extraction strips
@@ -241,10 +203,9 @@ def qualified_link_edges(
     anchor produce no row.
 
     Scale shape: one JVM-side regexp/split projection over the spans frame
-    (no Python), then the SAME '/'-routed two-level dict resolution as
-    ``resolve_mentions`` — broadcast probe for small dictionaries, shuffle
-    join otherwise.  Unresolved anchors are dropped (silent-drop parity,
-    graph_builder.rs:160-161).
+    (no Python), then one ``resolve_mentions`` call — the same two-level
+    dictionary probe as the edge build.  Unresolved anchors are dropped
+    (silent-drop parity, graph_builder.rs:160-161).
 
     ``spans``: (doc_id, spans array<struct<kind,text,media_ref,offset>>)."""
     inner = F.regexp_extract(F.col("s.text"), r"\[\[(.*)\]\]", 1)
@@ -289,42 +250,31 @@ def qualified_link_edges(
             )
         ).alias("qualifier"),
     )
-    routed = q.withColumn(
-        "route",
-        F.when(F.col("raw_target").contains("/"), F.lit(KIND_FULL)).otherwise(
-            F.lit(KIND_SHORT)
-        ),
-    )
-    d = F.broadcast(alias_dict) if broadcast else alias_dict
-    j1 = routed.join(
-        d,
-        (routed["raw_target"] == d["alias"]) & (routed["route"] == d["kind"]),
-        "left",
-    )
-    # chained left joins + coalesce (same one-pass restructure as
-    # resolve_mentions): the old hit1 ∪ hit2-over-missed shape evaluated
-    # the span explode + level-1 probe twice per action
-    ad = alias_dict.filter(F.col("kind") == KIND_ALIAS).select(
-        F.col("alias").alias("_al2"), F.col("canonical").alias("_can2")
-    )
-    if broadcast:
-        ad = F.broadcast(ad)
-    j2 = j1.join(ad, j1["raw_target"] == ad["_al2"], "left")
-    return (
-        j2.select(
-            "subj",
-            "pred",
-            F.coalesce(F.col("canonical"), F.col("_can2")).alias("obj"),
-            "qual_kind",
-            "qualifier",
-        )
-        .filter(F.col("obj").isNotNull())
-    )
+    edges, _ = resolve_mentions(q, alias_dict)
+    return edges.select("subj", "pred", "obj", "qual_kind", "qualifier")
 
 
-# Driver-side byte budget for the broadcast name dict (~1M typical names);
-# module-level so tests can pin the auto-decision on both sides of it.
+# Driver-side byte budget for a broadcast dictionary: the session's
+# autoBroadcastJoinThreshold (~1M typical names); module-level so tests can
+# pin the decision on both sides of it.
 _BROADCAST_BYTE_BUDGET = 64 * 1024 * 1024
+
+
+def _dict_fits_broadcast(d: DataFrame, what: str) -> bool:
+    """True when the string dictionary ``d`` fits the broadcast budget.
+
+    One agg: the estimated payload is the summed length of every column —
+    a byte estimate, not a row count, because a row count lies about
+    payload size.  Logs the estimate and the choice."""
+    est = d.agg(
+        F.coalesce(F.sum(sum(F.length(c) for c in d.columns)), F.lit(0))
+    ).collect()[0][0]
+    fits = est <= _BROADCAST_BYTE_BUDGET
+    logging.getLogger(__name__).info(
+        "%s: dictionary ~%d bytes (budget %d) -> %s",
+        what, est, _BROADCAST_BYTE_BUDGET, "broadcast" if fits else "shuffle",
+    )
+    return fits
 
 
 def unlinked_mentions(
@@ -377,25 +327,11 @@ def unlinked_mentions(
         .select(F.col("alias").alias("token"), F.col("canonical").alias("obj"))
     )
     if broadcast_dict is None:
-        # auto: BYTE-budget the driver-side dict, not a row count — at the
-        # old 5M-row threshold the collected Python strings were ~0.5-1 GB
-        # on the driver (re-pickled per executor), the exact OOM the JVM
-        # fallback exists to avoid.  One agg on the (small, usually
-        # persisted upstream) name side: estimated payload = sum of
-        # alias+canonical bytes; the 64 MB budget is ~1M typical names.
-        est = names.agg(
-            F.coalesce(
-                F.sum(F.length("token") + F.length("obj")), F.lit(0)
-            ).alias("b")
-        ).collect()[0]["b"]
-        broadcast_dict = est <= _BROADCAST_BYTE_BUDGET
-        import logging
-
-        logging.getLogger(__name__).info(
-            "unlinked_mentions: name dict ~%d bytes -> %s path",
-            est,
-            "broadcast/Arrow" if broadcast_dict else "JVM shuffle",
-        )
+        # a byte budget, not a row count: at the old 5M-row threshold the
+        # collected Python strings were ~0.5-1 GB on the driver
+        # (re-pickled per executor), the exact OOM the JVM fallback
+        # exists to avoid
+        broadcast_dict = _dict_fits_broadcast(names, "unlinked_mentions")
     if broadcast_dict:
         # Bounded-by-construction collect: the same rows a JVM broadcast
         # would materialize driver-side, shipped once per executor.

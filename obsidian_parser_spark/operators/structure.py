@@ -14,9 +14,9 @@ dictionary as every other mention.
 
 All three extractors are pure JVM expressions (split + regexp over the
 content column — no Python, no UDF): per document the work is linear in
-its line count, line order comes from one posexplode index, and the only
-shuffle anywhere is inline_fields' dictionary join, which reuses the
-graph build's broadcast/shuffle auto-selection.
+its line count, line order comes from one posexplode index, and
+inline_fields resolves its links through the graph build's own
+dictionary probe, ``linking.resolve_mentions``.
 """
 
 from __future__ import annotations
@@ -81,9 +81,7 @@ def task_items(content_df: DataFrame) -> DataFrame:
 
 
 def inline_fields(
-    content_df: DataFrame,
-    alias_dict: DataFrame | None = None,
-    broadcast: bool = True,
+    content_df: DataFrame, alias_dict: DataFrame | None = None
 ) -> DataFrame:
     """→ (doc_id, field_ord, field, value, obj): Dataview-style
     ``key:: value`` inline fields in document order.  When ``value`` is a
@@ -94,9 +92,8 @@ def inline_fields(
     obj); otherwise ``obj`` is NULL and the row is a typed literal
     property.
 
-    Scale shape: extraction is JVM regexp over lines; resolution reuses
-    ``linking.resolve_mentions`` unchanged, so the dictionary join keeps
-    the broadcast/shuffle auto-selection and hub-alias behavior of the
+    Scale shape: extraction is JVM regexp over lines; resolution is one
+    ``linking.resolve_mentions`` call, the same dictionary probe as the
     main edge build — no second resolution codepath to drift."""
     fl = _lines(content_df).filter(F.col("line").rlike(_FIELD_RE))
     w = Window.partitionBy("doc_id").orderBy("pos")
@@ -126,7 +123,7 @@ def inline_fields(
         F.col("field").alias("pred"),
         F.col("_tgt").alias("raw_target"),
     )
-    resolved, _ = resolve_mentions(mentions, alias_dict, broadcast=broadcast)
+    resolved, _ = resolve_mentions(mentions, alias_dict)
     r = resolved.select(
         F.col("subj").alias("doc_id"),
         F.col("mention_ord").alias("field_ord"),

@@ -473,9 +473,10 @@ def retrieval_stats(
     Scale shape: the term filter collapses the exploded token stream to
     |terms| × |docs| rows BEFORE any shuffle (predicate on a literal
     array, pushed into the projection); tf/dl are map-side-combined
-    aggregates; df is a by-term count over the already-aggregated tf
-    frame (tiny); the final top-k is one window over ≤ |terms| partitions
-    of pre-aggregated rows — never a sort of the raw token stream.
+    aggregates; df is a by-term window count over the already-aggregated
+    tf frame (tiny); it and the final top-k share one exchange into ≤
+    |terms| partitions of pre-aggregated rows — never a sort of the raw
+    token stream.
     """
     from pyspark.sql import Window
 
@@ -485,25 +486,29 @@ def retrieval_stats(
     )
     # carry the doc length through the explode instead of a second
     # tokenize pass + join: every exploded row of a doc sees the same
-    # size(_t), so min() re-derives it for free in the tf aggregate
+    # size(_t), so min() re-derives it for free in the tf aggregate.
+    # explode_outer, because the planner pushes a plain explode's
+    # size(_t) > 0 beneath the tokenize Project and tokenizes twice; the
+    # NULL token it adds for an empty doc fails the term filter.
     hits = (
         toks.select(
             "doc_id", F.size("_t").cast("long").alias("dl"),
-            F.explode("_t").alias("token"),
+            F.explode_outer("_t").alias("token"),
         )
         .filter(F.col("token").isin(*terms))
         .groupBy("doc_id", F.col("token").alias("term"))
         .agg(F.count(F.lit(1)).alias("tf"), F.min("dl").alias("dl"))
     )
-    df_ = hits.groupBy("term").agg(F.count(F.lit(1)).alias("df"))
     n_docs = documents.select(
         F.count(F.lit(1)).alias("n_docs")
     )
+    # df as a window count over hits itself (one row per (doc, term)), so
+    # hits has one consumer and the token stream is built once
     w = Window.partitionBy("term").orderBy(F.desc("tf"), F.asc("doc_id"))
     return (
-        hits.withColumn("rank", F.row_number().over(w))
+        hits.withColumn("df", F.count(F.lit(1)).over(Window.partitionBy("term")))
+        .withColumn("rank", F.row_number().over(w))
         .filter(F.col("rank") <= k)
-        .join(df_, "term")
         .crossJoin(F.broadcast(n_docs))
         .select(
             "term",
@@ -730,10 +735,13 @@ def _bpe_train(documents, n_merges, id_col, text_col):
     (w, syms, n)).  See ``bpe_merges`` for the contract."""
     from ..checkpointing import cut_lineage
 
-    toks = documents.select(F.expr(_TOKENS.format(t=text_col)).alias("_t"))
+    # explode the tokenize expression in place: exploding a staged column
+    # lets the planner push size(_t) > 0 beneath the tokenize Project and
+    # run it twice.  \z, not $: Java's $ also matches before a final
+    # U+2028, U+2029 or U+0085, which are not \s and so end a token.
     vocab = cut_lineage(
-        toks.select(F.explode("_t").alias("w"))
-        .filter(F.col("w").rlike("^[a-z0-9]+$"))
+        documents.select(F.explode(F.expr(_TOKENS.format(t=text_col))).alias("w"))
+        .filter(F.col("w").rlike("^[a-z0-9]+\\z"))
         .groupBy("w")
         .agg(F.count("*").alias("n"))
         .select("w", F.expr("filter(split(w, ''), x -> x != '')").alias("syms"), "n")

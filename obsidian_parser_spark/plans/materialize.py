@@ -166,8 +166,17 @@ def materialize_graph(
 
     Resumable: a second call with the same (out_dir, run_id) skips buckets
     whose manifest row is ``done`` — kill the job mid-run and re-submit.
+
+    Honours ``include_mdlinks``, ``use_aliases``, ``include_tag_triples``
+    and ``broadcast_dict``; the note filters and identity
+    canonicalization of ``build_graph`` raise ``ValueError`` rather than
+    write an unfiltered graph.
     """
     opts = opts or GraphBuildOptions()
+    for field in ("drop_parse_errors", "drop_empty", "drop_todo",
+                  "canonicalize_identities"):
+        if getattr(opts, field):
+            raise ValueError(f"materialize_graph does not support {field}=True")
     nodes_path = os.path.join(out_dir, "nodes")
     edges_path = os.path.join(out_dir, "edges")
     dict_path = os.path.join(out_dir, f"alias_dict_{run_id}")
@@ -231,7 +240,10 @@ def materialize_graph(
 
         mentions = mentions_from_notes(notes)
         edges, dangling = resolve_mentions(
-            mentions, alias_dict, use_aliases=opts.use_aliases
+            mentions,
+            alias_dict,
+            use_aliases=opts.use_aliases,
+            broadcast=opts.broadcast_dict is not False,
         )
         if opts.include_tag_triples:
             edges = edges.unionByName(tag_triples(notes))

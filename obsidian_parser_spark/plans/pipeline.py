@@ -20,7 +20,11 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..operators.linking import build_alias_dict, resolve_mentions
+from ..operators.linking import (
+    _dict_fits_broadcast,
+    build_alias_dict,
+    resolve_mentions,
+)
 from ..operators.tokenize import (
     mentions_from_notes,
     tag_triples,
@@ -38,11 +42,11 @@ class GraphBuildOptions:
     drop_empty: bool = False  # analyzer.rs:45
     drop_todo: bool = False  # analyzer.rs:46-49
     persist_notes: bool = True  # cache the tokenize stage (3 consumers)
-    # None = auto: broadcast the alias dict when small (hash-map probe,
-    # reference Index semantics), shuffle join when it would bottleneck the
-    # driver.  True/False forces.
+    # None = auto: hint a broadcast of the alias dict when its byte
+    # estimate fits the session's broadcast threshold (hash-map probe,
+    # reference Index semantics).  True always hints; False adds no hint
+    # and leaves the join strategy to the planner.
     broadcast_dict: bool | None = None
-    broadcast_dict_max_rows: int = 1_000_000
     # north_star canonicalization: rewrite every edge endpoint to its
     # identity-cluster canonical id (linking.identity_clusters — CC over
     # shared-stem ∪ identical-content ∪ alias→name evidence), collapsing
@@ -97,9 +101,10 @@ def build_graph(
     alias_dict = build_alias_dict(notes, use_aliases=opts.use_aliases)
     bc = opts.broadcast_dict
     if bc is None:
-        # auto: one count on the (persisted) dict decides the join strategy
+        # auto: one byte-estimate job on the persisted dict, which also
+        # fills its cache
         alias_dict = alias_dict.persist()
-        bc = alias_dict.count() <= opts.broadcast_dict_max_rows
+        bc = _dict_fits_broadcast(alias_dict, "build_graph")
     mentions = mentions_from_notes(notes)
     edges, dangling = resolve_mentions(
         mentions, alias_dict, use_aliases=opts.use_aliases, broadcast=bc

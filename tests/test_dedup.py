@@ -217,13 +217,14 @@ def test_bloom_membership_plan_is_jvm_only(spark):
 
 # NULL and blank text; 1, n-1, n and n+1 tokens for n=3; a repeated gram;
 # tab, CRLF, U+00A0 and U+2028 (neither is Java \s, so both stay inside a
-# token) and uppercase; two docs whose tokens hold U+0001 and would share
-# one key if grams were joined with it
+# token; a token ending in U+2028 is outside BPE's [a-z0-9]+ rule although
+# Java's $ matches before it) and uppercase; two docs whose tokens hold
+# U+0001 and would share one key if grams were joined with it
 HOSTILE = [
     None, "", "   ", "one", "a b", "a b c", "a b c d", "x y x y x y z",
     "Tab\there\r\nCRLF line\r\nMore", "nb\u00a0sp word ls\u2028sep word",
     "UPPER Case up upper", "a\x01b c d", "a b\x01c d",
-    "the cat sat the cat sat on",
+    "the cat sat the cat sat on", "one\u2028 two",
 ]
 
 

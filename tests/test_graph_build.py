@@ -1,5 +1,7 @@
 """Micro-vault golden test + linking semantics (SURVEY.md §2.3, FIXTURES.md §2)."""
 
+from collections import Counter
+
 import pytest
 
 from obsidian_parser_spark.plans.pipeline import (
@@ -330,3 +332,104 @@ def test_unlinked_mentions_byte_budget_path_choice(spark, monkeypatch):
     want = {("a", "b"): 2, ("d", "b"): 1}
     assert {(r["subj"], r["obj"]): r["n_mentions"] for r in under.collect()} == want
     assert {(r["subj"], r["obj"]): r["n_mentions"] for r in over.collect()} == want
+
+
+# A hostile dictionary for the two-level lookup: a root note 'readme' beside
+# 'a/readme'; note 'c' claims the aliases 'readme' and 'a/readme' (level 1
+# must win), 'x/y' (a '/' target that exists only as an alias) and 'nick';
+# 'src' also links a dangling target and a '/' target whose stem exists.
+RESOLVE_NOTES = {
+    "readme": "root",
+    "a/readme": "nested",
+    "c": "---\naliases:\n- readme\n- a/readme\n- x/y\n- nick\n---\nbody",
+    "src": "".join(
+        f"rel:: [[{t}#h]]\n"
+        for t in ("readme", "a/readme", "x/y", "nick", "ghost", "x/readme", "c")
+    ),
+}
+RESOLVE_ALIASES = {"c": ["readme", "a/readme", "x/y", "nick"]}
+
+
+def _py_resolve(target, use_aliases):
+    """Plain-Python J2 + J5: a '/' target consults only the full paths,
+    any other only the stems (fewest segments, then lexicographic id);
+    a miss falls back to the frontmatter aliases when enabled."""
+
+    def first(ids):
+        return min(ids, key=lambda d: (d.count("/") + 1, d), default=None)
+
+    if "/" in target:
+        hit = target if target in RESOLVE_NOTES else None
+    else:
+        hit = first(d for d in RESOLVE_NOTES if d.rsplit("/", 1)[-1] == target)
+    if hit is None and use_aliases:
+        hit = first(d for d, al in RESOLVE_ALIASES.items() if target in al)
+    return hit
+
+
+@pytest.mark.parametrize("broadcast", [True, False])
+@pytest.mark.parametrize("use_aliases", [True, False])
+@pytest.mark.parametrize(
+    "resolver", ["resolve_mentions", "qualified_link_edges", "inline_fields"]
+)
+def test_resolvers_match_python_two_level_lookup(
+    spark, resolver, use_aliases, broadcast
+):
+    """Every resolver gives the rows of a plain-Python two-level lookup.
+    ``broadcast=False`` drops the hint of ``resolve_mentions`` and turns
+    the session's auto-broadcast off, so its probe runs as a shuffle
+    join; the other two resolvers always hint."""
+    from obsidian_parser_spark.operators.linking import (
+        build_alias_dict,
+        qualified_link_edges,
+        resolve_mentions,
+    )
+    from obsidian_parser_spark.operators.structure import inline_fields
+    from obsidian_parser_spark.operators.tokenize import (
+        mentions_from_notes,
+        tokenize_documents,
+    )
+
+    docs = spans_df(spark, [spans_from_raw(d, t) for d, t in RESOLVE_NOTES.items()])
+    notes = tokenize_documents(docs, include_mdlinks=False)
+    d = build_alias_dict(notes, use_aliases=use_aliases)
+    targets = [
+        ln[len("rel:: [[") : -len("#h]]")] for ln in RESOLVE_NOTES["src"].splitlines()
+    ]
+    want = Counter(enumerate(_py_resolve(t, use_aliases) for t in targets))
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    old = spark.conf.get(key)
+    if not broadcast:
+        spark.conf.set(key, "-1")
+    try:
+        if resolver == "resolve_mentions":
+            edges, dangling = resolve_mentions(
+                mentions_from_notes(notes), d, use_aliases=use_aliases,
+                broadcast=broadcast,
+            )
+            plan = edges._jdf.queryExecution().executedPlan().toString()
+            assert ("BroadcastHashJoin" in plan) == broadcast, plan
+            assert edges.columns == ["subj", "mention_ord", "pred", "obj"]
+            assert dangling.columns == ["subj", "mention_ord", "pred", "raw_target"]
+            missed = dangling.collect()
+            assert {r.raw_target for r in missed} == {
+                targets[i] for i, o in want if o is None
+            }
+            got = Counter([(r.mention_ord, r.obj) for r in edges.collect()])
+            got.update((r.mention_ord, None) for r in missed)
+        elif resolver == "qualified_link_edges":
+            rows = qualified_link_edges(docs, d).collect()
+            assert {(r.subj, r.pred, r.qual_kind, r.qualifier) for r in rows} == {
+                ("src", "links_to", "heading", "h")
+            }
+            got = Counter(r.obj for r in rows)
+            want = Counter(o for _, o in want if o is not None)
+        else:
+            content = spark.createDataFrame(
+                list(RESOLVE_NOTES.items()), "doc_id string, content string"
+            )
+            rows = inline_fields(content, d).collect()
+            got = Counter((r.field_ord - 1, r.obj) for r in rows)
+    finally:
+        spark.conf.set(key, old)
+    assert got == want

@@ -1,11 +1,13 @@
 """Resumable bucketed materialization: lineage manifest + skip-done resume."""
 
 import pyspark.sql.functions as F
+import pytest
 
 from obsidian_parser_spark.plans.materialize import (
     materialize_graph,
     read_graph,
 )
+from obsidian_parser_spark.plans.pipeline import GraphBuildOptions
 from obsidian_parser_spark.sources.corpus import ensure_vault_corpus
 
 
@@ -75,8 +77,6 @@ def test_partial_resume_missing_dict_fails_loudly(spark, tmp_path):
     explicitly told to rebuild)."""
     import shutil
 
-    import pytest
-
     path = ensure_vault_corpus("sf0.0002", base=str(tmp_path / "corpus"))
     docs = spark.read.parquet(path)
     out = str(tmp_path / "graph")
@@ -107,8 +107,6 @@ def test_torn_manifest_fails_loudly(spark, tmp_path):
     resume, not be swallowed into a silent full restart."""
     import os
 
-    import pytest
-
     path = ensure_vault_corpus("sf0.0002", base=str(tmp_path / "corpus"))
     docs = spark.read.parquet(path)
     out = str(tmp_path / "graph")
@@ -136,3 +134,15 @@ def test_manifest_append_is_atomic_and_accumulates(spark, tmp_path):
     assert m.count() == 4  # 2 buckets × 2 runs
     leftovers = [d for d in os.listdir(out) if "_tmp_" in d]
     assert leftovers == []
+
+
+@pytest.mark.parametrize("field", ["drop_todo", "canonicalize_identities"])
+def test_unsupported_options_raise(spark, micro_vault, tmp_path, field):
+    """An option the bucketed writer does not apply raises instead of
+    writing an unfiltered graph and reporting success."""
+    opts = GraphBuildOptions(**{field: True})
+    with pytest.raises(ValueError, match=field):
+        materialize_graph(
+            spark, micro_vault, str(tmp_path / "graph"), run_id="r", n_buckets=2,
+            opts=opts,
+        )

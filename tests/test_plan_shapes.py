@@ -397,3 +397,34 @@ def test_late_round4_operator_plans_are_jvm_only(spark):
         assert "CartesianProduct" not in plan
         assert "BroadcastNestedLoopJoin" not in plan
         assert plan.count("HashAggregate") >= 2  # map-side partial
+
+
+def test_bpe_corpus_pass_and_retrieval_stats_tokenize_once(spark, monkeypatch):
+    """The tokenize expression appears once in BPE training's corpus pass
+    and once in ``retrieval_stats``: exploding a staged token column lets
+    the planner push ``size(_t) > 0`` beneath the tokenize Project, which
+    then runs it a second time."""
+    from obsidian_parser_spark import checkpointing
+    from obsidian_parser_spark.operators.textstats import (
+        bpe_merges,
+        retrieval_stats,
+    )
+
+    def spark_plan(df):
+        return df._jdf.queryExecution().sparkPlan().toString()
+
+    docs = spark.createDataFrame(
+        [(1, "a b a"), (2, ""), (3, None)], "doc_id int, text string"
+    )
+    plans = []
+    cut = checkpointing.cut_lineage
+
+    def spy(df, *args, **kwargs):
+        plans.append(spark_plan(df))
+        return cut(df, *args, **kwargs)
+
+    monkeypatch.setattr(checkpointing, "cut_lineage", spy)
+    bpe_merges(docs, n_merges=1)
+    corpus_pass = plans[0]  # the first cut is the word vocabulary
+    retrieval = spark_plan(retrieval_stats(docs, ["a"]))
+    assert [p.count("split(lower(") for p in (corpus_pass, retrieval)] == [1, 1]
